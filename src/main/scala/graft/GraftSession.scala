@@ -27,6 +27,13 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.mergeSchema", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", s"${64L * 1024 * 1024}")
+      // Compiled classes stay resident across queries: one pass over the
+      // headline queries plus the benchmark's olap mix compiles 1119
+      // distinct classes (graft.tools.CodegenWorkingSet), far past Spark's
+      // default LRU of 100, so a repeating mix recompiled every class on
+      // every run. 2048 leaves headroom; a full cache holds ~12 KB of
+      // source and bytecode per entry (~24 MB heap).
+      .config("spark.sql.codegen.cache.maxEntries", "2048")
       // This box stalls under host CPU-credit throttling (documented in
       // docs/BENCH_NOTES.md): a multi-second freeze can miss enough
       // executor→driver heartbeats that local-mode Spark kills the JVM

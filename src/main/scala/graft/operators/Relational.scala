@@ -53,10 +53,13 @@ object Relational {
     * never poison the other nine views (a single eager load failure here
     * once zeroed out 25 unrelated queries). The failed table's view is
     * simply absent; its own queries fail with TABLE_OR_VIEW_NOT_FOUND.
+    *
+    * Idempotent: a view still registered from the same directory and
+    * unchanged file is kept, so per-query callers pay no reload.
     */
   def views(s: SparkSession, d: String): Unit =
     Tables.all.foreach { t =>
-      try Tables.load(s, d, t).createOrReplaceTempView(t)
+      try Tables.registerView(s, d, t)
       catch {
         case e: Exception =>
           Console.err.println(

@@ -1,6 +1,10 @@
 package graft.sources
 
+import java.lang.ref.WeakReference
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Table catalog over the driver's parquet testdata.
   *
@@ -11,6 +15,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * row-group stat skipping are the Spark-native analog of TiFlash's
   * pack-level min-max rough-set index
   * (`/root/reference/dbms/src/Storages/DeltaMerge/Index/MinMaxIndex.h:31`).
+  *
+  * Schemas stay resident, as TiFlash keeps synced table schemas in
+  * memory (`dbms/src/TiDB/Schema/`): each session remembers, per path,
+  * the file signature and the schema Spark inferred from the parquet
+  * footer, and reuses the schema while the signature is unchanged.
+  * Relations are never shared: every `load` builds a fresh one.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -23,9 +33,88 @@ object Tables {
     */
   val dims: Set[String] = Set("region", "nation")
 
+  def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
+
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = read(spark, path(sfDir, name))
     if (name == "events") normalizeEventsTs(df) else df
+  }
+
+  /** (path, length, mtime) of a file, or of every file under a
+    * directory, sorted by path. A rewrite changes the length or mtime. */
+  private type Signature = Seq[(String, Long, Long)]
+
+  /** None when the path does not exist. */
+  private def signature(spark: SparkSession, path: String): Option[Signature] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val st = fs.getFileStatus(p)
+      if (st.isFile) Some(Seq((path, st.getLen, st.getModificationTime)))
+      else {
+        val files = fs.listFiles(p, true)
+        val b = Vector.newBuilder[(String, Long, Long)]
+        while (files.hasNext) {
+          val f = files.next()
+          b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+        }
+        Some(b.result().sortBy(_._1))
+      }
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** One thread-safe map per session; sessions are held weakly, so a
+    * dropped session takes its entries with it. */
+  private final class PerSession[V] {
+    private val maps = java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, V]]())
+    def apply(s: SparkSession): ConcurrentHashMap[String, V] =
+      maps.computeIfAbsent(s, _ => new ConcurrentHashMap[String, V]())
+  }
+
+  private final case class Resolved(signature: Signature, schema: StructType)
+  private val schemas = new PerSession[Resolved]
+
+  /** A fresh relation over `path`. While the file's signature matches
+    * the one its schema was inferred under, the schema is passed in and
+    * Spark reads no footer to infer it. */
+  private def read(spark: SparkSession, path: String): DataFrame =
+    signature(spark, path) match {
+      case None => spark.read.parquet(path) // let Spark report the missing path
+      case Some(sig) =>
+        val known = schemas(spark)
+        Option(known.get(path)).filter(_.signature == sig) match {
+          case Some(r) => spark.read.schema(r.schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            known.put(path, Resolved(sig, df.schema))
+            df
+        }
+    }
+
+  private final case class Registered(signature: Signature, view: WeakReference[AnyRef])
+  private val registered = new PerSession[Registered]
+
+  /** Register `name` from `dir` as a temp view, unless the view this
+    * method last registered under that name is still in the catalog and
+    * was read under the same file signature (which holds the path). A
+    * dropped or replaced view, another directory or a rewritten file
+    * re-registers. A failed load leaves nothing recorded, so the next
+    * call retries. */
+  def registerView(spark: SparkSession, dir: String, name: String): Unit = {
+    val mine = registered(spark)
+    val catalog = spark.sessionState.catalog
+    val sig = signature(spark, path(dir, name))
+    val current = Option(mine.get(name)).exists { r =>
+      sig.contains(r.signature) &&
+        catalog.getRawTempView(name).exists(_ eq r.view.get)
+    }
+    if (!current) {
+      mine.remove(name)
+      load(spark, dir, name).createOrReplaceTempView(name)
+      for (g <- sig; v <- catalog.getRawTempView(name))
+        mine.put(name, Registered(g, new WeakReference[AnyRef](v)))
+    }
   }
 
   /** Normalize `events.ts` to a microsecond timestamp regardless of how
