@@ -1,454 +1,95 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+/** Headline-query timings: one noop-write per query and one JSON line.
+  * Performance claims are measured with `perfbench/` (repeated,
+  * output-checked runs); this line is a single run. */
 object Bench {
-
-  /** Load sentinel (r12 VERDICT ask #4): a FIXED trivial probe — q1's
-    * shape over an in-memory range, no IO, no cache — timed before,
-    * mid, and after the sweep. Its cost is pure task scheduling + CPU,
-    * so host contention inflates it roughly linearly while code
-    * changes to the engine cannot move it at all; BenchBands compares
-    * the run's sentinel readings against the idle-box baseline and
-    * annotates band breaches as suspect-load instead of leaving the
-    * adjudication to prose (the r10–r12 throttle pattern). Median of 5
-    * runs per checkpoint so one GC pause can't fake a load signal. */
-  def sentinelSec(spark: SparkSession): Double = {
-    val runs = (0 until 5).map { _ =>
-      val t0 = System.nanoTime()
-      spark.range(100000)
-        .selectExpr("id % 7 as k", "id % 13 as v")
-        .groupBy("k").sum("v")
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }.sorted
-    runs(2)
-  }
-
-  /** IO-side load sentinel (r15 VERDICT ask #2): the CPU sentinel above
-    * is blind to HOST IO THROTTLING — r15's late-day drift inflated
-    * query totals 43.5→51 s while the pure-CPU probe sat nominal,
-    * forcing a prose adjudication the r13 sentinel was built to end.
-    * One probe pass = a 32 MiB fsync'd write of fixed bytes to a fresh
-    * temp file (the write path shuffle spills take) + a 32 MiB
-    * O_DIRECT read of a fixed probe file (the uncached-read path
-    * parquet scans take) — both on the same single ext4 device
-    * (/dev/vda) every bench read, spill, and pile write uses on this
-    * box. fsync and O_DIRECT are the point: a page-cached re-scan of a
-    * checked-in file never reaches the block layer, so it cannot see a
-    * cgroup/host IO limit at all (measured: induced direct-IO load
-    * inflates this probe 3–6× while leaving cached reads flat —
-    * docs/BENCH_NOTES.md "r16 io sentinel"). Engine code changes
-    * cannot move it; only the device can. Median of 3 passes
-    * (~0.4 s/checkpoint) so one writeback collision can't fake load.
-    * If O_DIRECT is unsupported the read half contributes 0 and the
-    * write half still instruments the device (writeback is charged at
-    * fsync regardless). */
-  /** True once the O_DIRECT read half of [[ioSentinelSec]] has become
-    * unavailable (filesystem without O_DIRECT, unreadable/uncreatable
-    * probe file): the probe then runs WRITE-ONLY and its readings sit
-    * ~0.02 s under the two-sided idle baseline — which would quietly
-    * loosen trip sensitivity if compared against the full baseline
-    * (r16 VERDICT ask #3 / ADVICE #1). [[BenchBands.ioLoadSuspect]]
-    * takes this flag and switches to the write-only baseline, and the
-    * bench JSON stamps `ioSentinel.writeOnly` so a reader of the
-    * metric line knows which baseline the readings were judged
-    * against. Sticky for the JVM's lifetime: a probe that degrades
-    * mid-run stays degraded so all its checkpoints are comparable. */
-  @volatile private[graft] var ioProbeWriteOnly = false
-
-  /** One O_DIRECT read pass over `fixed`. Returns false — instead of
-    * throwing — ONLY for the expected unavailability classes
-    * (IOException: missing/unreadable file, filesystem refusing
-    * O_DIRECT at open or read; UnsupportedOperationException: the
-    * DIRECT open option itself unsupported). Anything else — OOM,
-    * interrupt, linkage errors — propagates: the old blanket
-    * `catch Throwable` swallowed fatal errors and silently degraded
-    * the probe with no trace in the metric record (r16 VERDICT ask
-    * #3). */
-  private[graft] def directReadPass(fixed: java.nio.file.Path): Boolean =
-    try {
-      val buf = java.nio.ByteBuffer.allocateDirect((1 << 20) + 4096)
-        .alignedSlice(4096)
-      val rch = java.nio.channels.FileChannel.open(fixed,
-        java.nio.file.StandardOpenOption.READ,
-        com.sun.nio.file.ExtendedOpenOption.DIRECT)
-      try {
-        var pos = 0L
-        val sz = rch.size()
-        while (pos < sz) {
-          buf.clear()
-          val r = rch.read(buf, pos)
-          if (r < 0) pos = sz else pos += r
-        }
-      } finally rch.close()
-      true
-    } catch {
-      case _: java.io.IOException => false
-      case _: UnsupportedOperationException => false
-    }
-
-  private def markWriteOnly(why: String): Unit = {
-    if (!ioProbeWriteOnly)
-      System.err.println(s"[bench] io-sentinel: $why — continuing with a " +
-        "WRITE-ONLY probe (readings judged against the write-only baseline; " +
-        "stamped ioSentinel.writeOnly in the metric JSON)")
-    ioProbeWriteOnly = true
-  }
-
-  def ioSentinelSec(): Double = {
-    val block = new Array[Byte](1 << 20)
-    var x = 0x9E3779B97F4A7C15L
-    var i = 0
-    while (i < block.length) {
-      x ^= x << 13; x ^= x >>> 7; x ^= x << 17
-      block(i) = x.toByte; i += 1
-    }
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    import java.nio.channels.FileChannel
-    val dir = Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"))
-    // Per-PROCESS probe file (ADVICE r16 #2): the old fixed shared path
-    // raced concurrent JVMs (both see !exists, both recreate — possibly
-    // against an in-flight O_DIRECT read in the other process) and a
-    // squatted path threw out of the probe, aborting the whole bench.
-    // A pid-suffixed name is collision-free across processes; creation
-    // failure degrades the probe to write-only instead of killing the
-    // run, and the file is removed at JVM exit.
-    val fixed = dir.resolve(
-      s"graft-iosentinel-${ProcessHandle.current().pid()}.bin")
-    if (!ioProbeWriteOnly)
-      try {
-        if (!Files.exists(fixed) || Files.size(fixed) != (32L << 20)) {
-          val ch = FileChannel.open(fixed, StandardOpenOption.CREATE,
-            StandardOpenOption.WRITE, StandardOpenOption.TRUNCATE_EXISTING)
-          try {
-            (0 until 32).foreach(_ => ch.write(java.nio.ByteBuffer.wrap(block)))
-            ch.force(true)
-          } finally ch.close()
-          fixed.toFile.deleteOnExit()
-        }
-      } catch { case e: java.io.IOException =>
-        markWriteOnly(s"probe-file creation failed at $fixed ($e)")
-      }
-    val runs = (0 until 3).map { _ =>
-      val t0 = System.nanoTime()
-      val f = Files.createTempFile(dir, "graft-iosent", ".bin")
-      val wch = FileChannel.open(f, StandardOpenOption.WRITE)
-      try {
-        (0 until 32).foreach(_ => wch.write(java.nio.ByteBuffer.wrap(block)))
-        wch.force(true)
-      } finally { wch.close(); Files.deleteIfExists(f) }
-      if (!ioProbeWriteOnly && !directReadPass(fixed))
-        markWriteOnly(s"O_DIRECT read of $fixed unavailable")
-      (System.nanoTime() - t0) / 1e9
-    }.sorted
-    runs(1)
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // Optional subset (scale-proof runs time a handful of headliners at
+    // 10x/100x without paying for the full suite); full run by default.
+    val names = sys.env.get("SPARK_GRAFT_QUERIES").filter(_.trim.nonEmpty).map { list =>
+      val want = list.split(",").map(_.trim).filter(_.nonEmpty)
+      val known = SparkEntry.queries.keySet
+      want.filterNot(known).foreach(q =>
+        System.err.println(s"[bench] unknown query in SPARK_GRAFT_QUERIES: $q"))
+      want.filter(known).toSeq
+    }
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // ---- preflight (r16 VERDICT ask #1a): sample BOTH probes before
-    // any query warmup and stamp the verdict into the metric JSON — a
-    // run that STARTED on a degraded box is machine-labeled from its
-    // first reading, independent of the three in-sweep checkpoints
-    // (BENCH_r16 itself was such a run: the drift was only visible at
-    // the mid checkpoint, after half the sweep's minutes were already
-    // spent). The probes still need their own settling first — fresh-
-    // JVM first executions of the CPU probe's shape read ~2x the
-    // steady cost, and the IO probe's first call creates the 32 MiB
-    // per-process probe file — which is probe warmup, not query
-    // warmup: it builds no engine state.
-    (0 until 3).foreach(_ => sentinelSec(spark))
-    ioSentinelSec()
-    val preCpu = sentinelSec(spark)
-    val preIo = ioSentinelSec()
-    val preflightSuspect = BenchBands.loadSuspect(Seq(preCpu)) ||
-      BenchBands.ioLoadSuspect(Seq(preIo), ioProbeWriteOnly)
-    System.err.println(f"[bench] preflight cpu $preCpu%.3f s / io $preIo%.3f s → " +
-      (if (preflightSuspect) "SUSPECT-LOAD (the box is degraded before any " +
-        "query ran; this run's readings must not seed bands)" else "nominal"))
+    val (line, allOk) = run(spark, sfDir, names)
+    try spark.stop() catch { case NonFatal(e) =>
+      System.err.println(s"[bench] spark.stop: $e") }
+    // printed after spark.stop() so nothing can follow it on stdout
+    println(line)
+    System.out.flush()
+    if (!allOk) sys.exit(1)
+  }
+
+  /** Times `names` (the headline set when None) and returns the metric
+    * line and whether every query passed. Failed queries report null
+    * and are listed in "failed". */
+  def run(spark: SparkSession, sfDir: String, names: Option[Seq[String]])
+      : (String, Boolean) = {
     // Warmup: JVM/codegen/parquet-footer costs land here, not on the
     // first timed query.
     try SparkEntry.queries("q1_agg")(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => }
+    catch { case NonFatal(e) => System.err.println(s"[bench] warmup q1_agg: $e") }
     CacheHygiene.sweep(spark, "warmup")
-    // Headline queries; noop write forces full materialization (a bare
-    // count() would let Catalyst prune the computed columns away).
-    // After each query, sweep any cache it left behind (outside the
-    // timed region) — cache hygiene is a per-query invariant, so one
-    // operator's leak can never inflate the queries that follow it.
-    // Optional subset (scale-proof runs time a handful of headliners at
-    // 10x/100x without paying for the full suite); full run by default.
-    val subset = sys.env.get("SPARK_GRAFT_QUERIES").exists(_.trim.nonEmpty)
-    val names =
-      if (subset) {
-        val want = sys.env("SPARK_GRAFT_QUERIES")
-          .split(",").map(_.trim).filter(_.nonEmpty)
-        val known = SparkEntry.queries.keySet
-        want.filterNot(known).foreach(q =>
-          System.err.println(s"[bench] unknown query in SPARK_GRAFT_QUERIES: $q"))
-        want.filter(known).toSeq
-      } else SparkEntry.benchNames
+    val timedNames = names.getOrElse(SparkEntry.benchNames)
     // Per-query untimed warmups (QueryDef.benchWarmup): state a live
     // pipeline maintains incrementally (q258's piles) is built here so
     // the timed region measures the probe — the production shape — not
-    // one-off state construction.
+    // one-off state construction. A failed warmup is stamped in the
+    // line: the timed run then rebuilds that state cold.
     val defsByName = SparkEntry.defs.map(q => q.name -> q).toMap
-    // A warmup failure is recorded in the emitted metric line (ADVICE
-    // r14 #3): the timed run would then rebuild the state COLD inside
-    // its timed region (pileCache retries), so the reading no longer
-    // measures the probe-only production shape — without a machine-
-    // readable stamp that number would silently enter the band series.
     val warmupFailed = scala.collection.mutable.ListBuffer[String]()
-    names.flatMap(defsByName.get).foreach { q =>
+    timedNames.flatMap(defsByName.get).foreach { q =>
       q.benchWarmup.foreach { w =>
         System.err.println(s"[bench] warmup ${q.name}")
         try w(spark, sfDir)
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           warmupFailed += q.name
           System.err.println(s"[bench] warmup ${q.name}: $e") }
         CacheHygiene.sweep(spark, s"warmup-${q.name}")
       }
     }
-    // (probe settling + the one-off 32 MiB probe-file creation already
-    // happened in the preflight block above, outside every checkpoint)
-    val sentBefore = sentinelSec(spark)
-    val ioBefore = ioSentinelSec()
-    val half = names.size / 2
-    var sentMid = -1.0
-    var ioMid = -1.0
-    val timed = names.zipWithIndex.map { case (name, i) =>
-      if (i == half) { sentMid = sentinelSec(spark); ioMid = ioSentinelSec() }
-      val fn = SparkEntry.queries(name)
+    // Noop write forces full materialization (a bare count() would let
+    // Catalyst prune the computed columns away). Each query's leftover
+    // cache is swept outside its timed region.
+    val timed = timedNames.map { name =>
       val t0 = System.nanoTime()
       val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); false }
-      val elapsed = (System.nanoTime() - t0) / 1e9
+        try {
+          SparkEntry.queries(name)(spark, sfDir)
+            .write.format("noop").mode("overwrite").save()
+          true
+        } catch { case NonFatal(e) => System.err.println(s"[bench] $name: $e"); false }
+      val ms = (System.nanoTime() - t0 + 500000) / 1000000
       CacheHygiene.sweep(spark, name)
-      (name, elapsed, ok)
+      (name, ms, ok)
     }
-    val sentAfter = sentinelSec(spark)
-    val ioAfter = ioSentinelSec()
-    if (sentMid < 0) sentMid = sentAfter // degenerate: < 2 queries
-    if (ioMid < 0) ioMid = ioAfter
-    val sentinel = Seq(sentBefore, sentMid, sentAfter)
-    val ioSentinel = Seq(ioBefore, ioMid, ioAfter)
-    // Failed queries report null (not their near-zero failure-path
-    // elapsed) and are listed in "failed"; rc is nonzero on any failure.
-    val qs = timed.map { case (k, v, ok) =>
-      "\"" + k + "\":" + (if (ok) v.toString else "null")
+    // seconds at ms precision; the total is the sum of the printed values
+    def sec(ms: Long) = f"${ms / 1000.0}%.3f"
+    def quoted(s: String) = "\"" + s + "\""
+    val qs = timed.map { case (k, ms, ok) =>
+      quoted(k) + ":" + (if (ok) sec(ms) else "null")
     }.mkString("{", ",", "}")
-    val failed = timed.collect { case (k, _, false) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val total = timed.collect { case (_, v, true) => v }.sum
-    // Regression bands (stderr-only; the driver JSON contract is
-    // unchanged and band breaches never fail the bench). Subset runs
-    // skip the band check: scale-proof subsets run at other SFs/configs
-    // and their no-band hints for non-headliners would only mislead.
-    val breaches =
-      if (sfDir.endsWith("sf0.1") && !subset)
-        // warmup-failed headliners are excluded from band comparison
-        // (stamped cold-state, r15 VERDICT ask #3): their timed region
-        // rebuilt state the probe-only band never pays for
-        BenchBands.check(timed.collect { case (k, v, true) => (k, v) }, sentinel,
-          warmupFailed.toSet, ioSentinel, ioProbeWriteOnly)
-      else Seq.empty
-    // ---- in-JVM breach re-time (r16 VERDICT ask #1b): the band
-    // protocol's "a regression must repeat" rule as MACHINE evidence —
-    // each breached query is re-timed once after the series (fresh
-    // action, same warm JVM, cache-swept), and the retry verdict rides
-    // the metric JSON: a retry landing back in band labels the breach
-    // non-repeating with no prose or stderr tail needed; a retry that
-    // breaches again is same-JVM evidence the regression is real. The
-    // retry only ADDS evidence — the original reading stays in
-    // "queries" and the breach list is unchanged.
-    val retries = breaches.flatMap { name =>
-      val t0 = System.nanoTime()
-      val ok =
-        try { SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] retry $name: $e"); false }
-      val sec = (System.nanoTime() - t0) / 1e9
-      CacheHygiene.sweep(spark, s"retry-$name")
-      // Nearest-sentinel stamp (r17 VERDICT ask #8): BENCH_r17's q215
-      // retry ALSO breached on a box that stayed degraded, and the
-      // record carried no probe evidence against the retry itself —
-      // adjudication needed cross-run forensics. One CPU-sentinel
-      // reading taken right after each retry rides the record as
-      // `sentinelAt`; a still-breached retry on a tripped sentinel is
-      // machine-labeled suspect instead of "treat as real".
-      val sentAt = sentinelSec(spark)
-      val sentSuspect = BenchBands.loadSuspect(Seq(sentAt))
-      if (!ok) None
-      else {
-        val inBand = BenchBands.retryInBand(name, sec)
-        System.err.println(f"[bands] retry $name: $sec%.2f s " +
-          f"(sentinel $sentAt%.3f s) → " + (inBand match {
-          case Some(true) => "in band (breach non-repeating — adjudicated environmental)"
-          case Some(false) if sentSuspect =>
-            "STILL BREACHED, but the nearest sentinel is tripped — " +
-              "suspect-load, not band evidence; re-run idle"
-          case Some(false) => "STILL BREACHED (repeats in the same JVM — treat as real)"
-          case None => "no band"
-        }))
-        Some((name, sec, inBand, sentAt))
-      }
-    }
-    // ---- streaming-maintenance tick costs (r17 VERDICT ask #6): the
-    // pile families whose per-tick ingest/compaction appears in NO
-    // timed query region — IVF, the postings/BM25 companions, and the
-    // agg-MV state (LSH/dup-span/shingle maintenance already rides the
-    // q258/q259 capstone warmups and IncrementalProof). Each family
-    // ingests its table as two micro-batches into a fresh temp pile:
-    // tick 1 is setup, tick 2 is the timed STEADY-STATE per-tick cost
-    // (a new batch against existing state + checkpoint), and the
-    // compaction is timed separately. Runs AFTER every timed query and
-    // retry (nothing here can inflate a query reading), full runs
-    // only; a family that throws reports -1 and never fails the bench.
-    val maintenance = if (subset) Seq.empty else benchMaintenance(spark, sfDir)
+    val failed = timed.collect { case (k, _, false) => quoted(k) }.mkString("[", ",", "]")
+    val total = timed.collect { case (_, ms, true) => ms }.sum
     // "subset":true marks a partial run so its total can never be
-    // mistaken for an official 22-headliner reading.
-    val subsetMark = if (subset) s""""subset":true,"nQueries":${names.size},""" else ""
+    // mistaken for a full headline reading.
+    val subsetMark = names.fold("")(n => s""""subset":true,"nQueries":${n.size},""")
     val warmupMark =
       if (warmupFailed.isEmpty) ""
-      else warmupFailed.map("\"" + _ + "\"").mkString(""""warmupFailed":[""", ",", "],")
-    // loadElevated per probe (r16 VERDICT ask #1c): the advisory
-    // sub-trip tier was stderr-only, so a JSON-only reader could not
-    // see the probe evidence behind a ~30% drift; writeOnly records
-    // which baseline the io readings were judged against.
-    val ioBase = BenchBands.ioBaselineFor(ioProbeWriteOnly)
-    val retryJson =
-      if (retries.isEmpty) ""
-      else retries.map { case (n, s, ib, sa) =>
-        f""""$n":{"retrySec":$s%.3f,"inBand":${ib.map(_.toString).getOrElse("null")},""" +
-          f""""sentinelAt":$sa%.3f}"""
-      }.mkString(""""retries":{""", ",", "},")
-    val maintJson =
-      if (maintenance.isEmpty) ""
-      else maintenance.map { case (n, t, c) =>
-        f""""$n":{"tickSec":$t%.3f,"compactSec":$c%.3f}"""
-      }.mkString(""""maintenance":{""", ",", "},")
-    val sentJson =
-      f""""preflight":{"cpu":$preCpu%.3f,"io":$preIo%.3f,"suspect":$preflightSuspect},""" +
-      f""""sentinel":{"before":$sentBefore%.3f,"mid":$sentMid%.3f,""" +
-      f""""after":$sentAfter%.3f,"idleBaseline":${BenchBands.SentinelBaselineSec}%.3f,""" +
-      s""""suspectLoad":${BenchBands.loadSuspect(sentinel)},""" +
-      s""""loadElevated":${BenchBands.loadElevated(sentinel, BenchBands.SentinelBaselineSec)}},""" +
-      f""""ioSentinel":{"before":$ioBefore%.3f,"mid":$ioMid%.3f,""" +
-      f""""after":$ioAfter%.3f,"idleBaseline":$ioBase%.3f,""" +
-      s""""writeOnly":$ioProbeWriteOnly,""" +
-      s""""suspectLoad":${BenchBands.ioLoadSuspect(ioSentinel, ioProbeWriteOnly)},""" +
-      s""""loadElevated":${BenchBands.loadElevated(ioSentinel, ioBase)}},"""
-    // Two-line metric output (r17 VERDICT ask #2): the driver tails the
-    // sbt output (~2 KB) and parses the LAST line — the r13..r17 metric
-    // line had grown past that window (full-precision seconds + retry
-    // blocks), so the driver's whole perf adjudication ran on a
-    // truncated string (`parsed: null`, `n_common: 0`). The DETAIL line
-    // below keeps everything the old line carried (full-precision
-    // seconds, retries, the new maintenance ticks); the FINAL line is
-    // the compact driver contract — total + ms-precision per-query
-    // seconds + failed + sf, plus the probe stamps BandSeed requires —
-    // and is printed after spark.stop() so nothing can follow it on
-    // stdout.
-    println(s"""{"metric":"detail","value":$total,"unit":"sec",$subsetMark$warmupMark$sentJson$retryJson$maintJson"queries":$qs,"failed":$failed,"sf":"$sfDir"}""")
-    val qsCompact = timed.map { case (k, v, ok) =>
-      "\"" + k + "\":" + (if (ok) f"$v%.3f" else "null")
-    }.mkString("{", ",", "}")
-    val finalLine = f"""{"metric":"total","value":$total%.3f,"unit":"sec",""" +
-      s"""$subsetMark$warmupMark$sentJson"queries":$qsCompact,""" +
-      s""""failed":$failed,"sf":"$sfDir"}"""
-    try spark.stop() catch { case e: Throwable =>
-      System.err.println(s"[bench] spark.stop: $e") }
-    println(finalLine)
-    System.out.flush()
-    if (timed.exists(!_._3)) sys.exit(1)
-  }
-
-  /** Per-tick streaming-maintenance costs (r17 VERDICT ask #6) — see
-    * the call site. Returns (family, steadyTickSec, compactSec); -1 on
-    * failure. The temp piles are deleted before returning. */
-  private def benchMaintenance(spark: SparkSession, sfDir: String)
-      : Seq[(String, Double, Double)] = {
-    import org.apache.spark.sql.functions._
-    import graft.streaming.Ingest
-    val root = java.nio.file.Files.createTempDirectory("graft-benchmaint")
-    val rootS = root.toString
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def run(name: String)(body: => (Double, Double)): (String, Double, Double) =
-      try {
-        val (t, c) = body
-        System.err.println(f"[bench] maintenance $name: tick $t%.2f s, compact $c%.2f s")
-        (name, t, c)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] maintenance $name failed: $e")
-        (name, -1.0, -1.0)
-      }
-    val out = Seq(
-      run("ivf") {
-        val in = s"$rootS/ivf/in"; val idx = s"$rootS/ivf/pile"
-        val emb = graft.sources.Tables.embeddings(spark, sfDir)
-        // quantizer fixed upfront from the full table (the IVF ingest
-        // contract; rotation is rebuildIvfIndex, not a tick cost)
-        val cent = graft.operators.Similarity.ivfCentroids(emb)
-        emb.filter(pmod(col("vec_id"), lit(2)) === 0)
-          .write.mode("append").parquet(in)
-        Ingest.streamIvfIngest(spark, in, idx, cent, autoCompactSegments = 0)
-        emb.filter(pmod(col("vec_id"), lit(2)) === 1)
-          .write.mode("append").parquet(in)
-        (timed(Ingest.streamIvfIngest(spark, in, idx, cent, autoCompactSegments = 0)),
-          timed(Ingest.compactIvfIndex(spark, idx)))
-      },
-      run("post") {
-        val in = s"$rootS/post/in"
-        val idx = s"$rootS/post/pile"
-        val tfIdx = s"$rootS/post/tf"
-        val stats = s"$rootS/post/stats"
-        val docs = graft.sources.Tables.documents(spark, sfDir)
-        docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-          .write.mode("append").parquet(in)
-        Ingest.streamPostingsIngest(spark, in, idx, autoCompactSegments = 0)
-        Ingest.streamTfPostingsIngest(spark, in, tfIdx, autoCompactSegments = 0)
-        Ingest.streamDocStatsIngest(spark, in, stats, autoCompactSegments = 0)
-        docs.filter(pmod(col("doc_id"), lit(2)) === 1)
-          .write.mode("append").parquet(in)
-        // one tick = the full q264/q267 read surface's state: postings
-        // + tf-postings + doc-stats, maintained in tandem
-        (timed {
-          Ingest.streamPostingsIngest(spark, in, idx, autoCompactSegments = 0)
-          Ingest.streamTfPostingsIngest(spark, in, tfIdx, autoCompactSegments = 0)
-          Ingest.streamDocStatsIngest(spark, in, stats, autoCompactSegments = 0)
-        }, timed {
-          Ingest.compactPostings(spark, idx)
-          Ingest.compactTfPostings(spark, tfIdx)
-          Ingest.compactDocStats(spark, stats)
-        })
-      },
-      run("aggmv") {
-        val in = s"$rootS/aggmv/in"; val state = s"$rootS/aggmv/pile"
-        val ev = graft.sources.Tables.events(spark, sfDir)
-        ev.filter(pmod(col("event_id"), lit(2)) === 0)
-          .write.mode("append").parquet(in)
-        Ingest.streamAggMaintain(spark, in, state, autoCompactSegments = 0)
-        ev.filter(pmod(col("event_id"), lit(2)) === 1)
-          .write.mode("append").parquet(in)
-        (timed(Ingest.streamAggMaintain(spark, in, state, autoCompactSegments = 0)),
-          timed(Ingest.compactAggState(spark, state)))
-      })
-    // diagnostic temp piles — delete now, not at JVM exit
-    try {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(root.toFile)
-    } catch { case _: java.io.IOException => }
-    CacheHygiene.sweep(spark, "maintenance")
-    out
+      else warmupFailed.map(quoted).mkString(""""warmupFailed":[""", ",", "],")
+    val line = s"""{"metric":"total","value":${sec(total)},"unit":"sec",""" +
+      s"""$subsetMark$warmupMark"queries":$qs,"failed":$failed,"sf":"$sfDir"}"""
+    (line, timed.forall(_._3))
   }
 }

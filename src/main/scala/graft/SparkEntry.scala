@@ -44,6 +44,7 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     defs.flatMap(q => q.oracle.map(q.name -> _)).toMap
 
-  /** Headline subset timed by Bench. */
+  /** Headline subset timed by [[Bench]] when no query list is given:
+    * one noop-write per query, reported in its one-line JSON. */
   def benchNames: Seq[String] = defs.filter(_.headline).map(_.name)
 }

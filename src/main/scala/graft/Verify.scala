@@ -1,10 +1,15 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    if (args.length < 2) {
+      System.err.println("usage: graft.Verify <sfDir> <outDir> [name,name,...]")
+      sys.exit(2)
+    }
     val Array(sfDir, outDir) = args.take(2)
     // optional 3rd arg: comma-separated query names (fast local re-check)
     val only: Set[String] = args.drop(2).headOption
@@ -18,7 +23,7 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // per-query cache hygiene: operators release corpus-sized caches

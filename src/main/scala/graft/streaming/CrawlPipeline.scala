@@ -118,8 +118,7 @@ object CrawlPipeline {
     // below makes a wedged gate job fail loudly instead of hanging the
     // tick forever (generous bound: a tick is O(batch), minutes even at
     // scale, and the two gates run concurrently).
-    val gateTimeout = sys.props.get("graft.gate.timeoutSec")
-      .map(_.toLong.seconds).getOrElse(2.hours)
+    val gateTimeout = 2.hours
     val fGate1 = Future {
       blocking {
         val nBench = bench.count()

@@ -127,11 +127,9 @@ object IvfPipeline {
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     Ingest.ivfProbe(s, pileFor(s, d), queries, nProbe = 4)
   }.copy(headline = true, benchWarmup = Some { (s, d) =>
-    // benched headliner from r17: the pile is built UNTIMED (a live
-    // pipeline maintains it incrementally across its ingest history),
-    // so the headline number measures the PROBE — the production
-    // recurring read — per the q258/q259 discipline. First official
-    // band seeds via tools/BandSeed from BENCH_r17.
+    // the pile is built UNTIMED (a live pipeline maintains it
+    // incrementally across its ingest history), so the timed region
+    // measures the PROBE — the production recurring read.
     pileFor(s, d); ()
   })
 

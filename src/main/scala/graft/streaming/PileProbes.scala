@@ -137,11 +137,9 @@ object PileProbes {
         Ingest.mergePostingsSegments(pruned), probeTerms)
     }
   }.copy(headline = true, benchWarmup = Some { (s, d) =>
-    // benched headliner: the pile is built UNTIMED (a live pipeline
-    // maintains it across its ingest history), so the headline number
-    // measures the PROBE — the production recurring read — per the
-    // q258/q262 discipline. First official band seeds via
-    // tools/BandSeed from the next BENCH_r{N}.
+    // the pile is built UNTIMED (a live pipeline maintains it across
+    // its ingest history), so the timed region measures the PROBE —
+    // the production recurring read.
     postingsPileFor(s, d); ()
   })
 
