@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-query cache hygiene for shared-session harnesses (Bench,
   * Verify): operators release their corpus-sized persists themselves
@@ -46,5 +46,15 @@ object CacheHygiene {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = true))
     left.size
+  }
+
+  /** `df` persisted and materialized — the small result a probe hands
+    * back for the harness to sweep. If materializing fails, the cache
+    * is released before the failure propagates. */
+  def materialized(df: DataFrame): DataFrame = {
+    val out = df.persist()
+    var done = false
+    try { out.count(); done = true; out }
+    finally if (!done) out.unpersist(blocking = false)
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.util.control.NonFatal
 
 /** Cluster-width knob for CPU-bound repartitions and range ranks.
   *
@@ -28,7 +29,7 @@ object Par {
     * relations) or the listing fails — callers treat that as "cannot
     * prove parallelism". */
   def estimatedScanSplits(df: DataFrame): Long = {
-    val files = try df.inputFiles catch { case _: Throwable => Array.empty[String] }
+    val files = try df.inputFiles catch { case NonFatal(_) => Array.empty[String] }
     if (files.isEmpty) return 0L
     val spark = df.sparkSession
     val conf = spark.sessionState.conf

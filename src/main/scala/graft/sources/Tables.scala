@@ -42,10 +42,10 @@ object Tables {
 
   /** (path, length, mtime) of a file, or of every file under a
     * directory, sorted by path. A rewrite changes the length or mtime. */
-  private type Signature = Seq[(String, Long, Long)]
+  private[graft] type Signature = Seq[(String, Long, Long)]
 
   /** None when the path does not exist. */
-  private def signature(spark: SparkSession, path: String): Option[Signature] = {
+  private[graft] def signature(spark: SparkSession, path: String): Option[Signature] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {

@@ -248,85 +248,12 @@ object CrawlPipeline {
           .otherwise("accepted"))
       .withColumn("accepted",
         when(col("rejected_by") === "accepted", 1L).otherwise(0L))
-      .persist()
-    try out.count() // batch-sized result; swept by the harness after use
-    catch { case t: Throwable => out.unpersist(blocking = false); throw t }
-    out
+    graft.CacheHygiene.materialized(out) // batch-sized; swept by the harness
     } finally {
       bench.unpersist(blocking = true)
       if (cand != null) cand.unpersist(blocking = true) // lshProbe's candidates
       pileFetch.foreach(_.unpersist(blocking = true)) // shingleFetch's point-read
       bloomBc.foreach(_.unpersist(false))
-    }
-  }
-
-  /** Process-lifetime pile workdir + cache (ADVICE r13 #3): q258's
-    * piles for a given sfDir are DETERMINISTIC (fixed corpus/batch
-    * split, fixed banding params), so they are built once per JVM,
-    * reused by repeated bench/correctness/plan runs in the same
-    * process, and deleted by a shutdown hook — repeated invocations no
-    * longer accumulate corpus-scale window state under java.io.tmpdir.
-    * Staging inputs and stream checkpoints are deleted right after the
-    * build (they are not in any probe's lineage); only the piles
-    * themselves live until JVM exit. */
-  private val pileCache =
-    scala.collection.mutable.Map[String, (String, String, String)]()
-  /** On-disk workdir names come from this counter, not from
-    * `String.hashCode` of the sfDir (ADVICE r14 #1): two distinct
-    * sfDirs with colliding hashCodes in one JVM would get separate
-    * cache entries but SHARE a pile directory — the second build then
-    * appends its corpus into the first dataset's piles (markers match,
-    * so nothing refuses) and probes silently read a merged corpus. A
-    * per-entry counter is collision-free by construction; it is only
-    * ever read under the pileCache lock. */
-  private var pileDirSeq = 0
-  private lazy val workRoot: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-crawl").toString
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(dir))
-    }
-    dir
-  }
-
-  /** Cheap input snapshot signature for the pile cache key (r15
-    * VERDICT ask #4 / observation #3): the cache assumed the parquet
-    * under `d` is immutable for the JVM's lifetime — true for the
-    * read-only testdata, but a regenerated dataset at the SAME path
-    * (e.g. a ScaleUp re-run onto its previous /tmp target mid-JVM)
-    * would silently serve piles built from the OLD bytes. The
-    * signature is the documents table's file listing (name, length,
-    * mtime) — a driver-side metadata walk, no data read: any
-    * regeneration rewrites part files (fresh names/mtimes at minimum),
-    * so a changed input gets a NEW cache entry and fresh piles built
-    * from the current bytes. Stale entries' workdirs stay on disk
-    * until JVM exit (same lifecycle as before — the shutdown hook
-    * removes the whole workRoot). */
-  private def inputFingerprint(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) "absent"
-    else {
-      // RECURSIVE file walk (ADVICE r16 #4): a top-level listStatus
-      // fingerprinted only direct children, so a PARTITIONED documents
-      // table rewritten in place could collide on filesystems where a
-      // directory entry's length/mtime does not reflect nested
-      // part-file rewrites — reviving the stale-pile hazard this
-      // fingerprint exists to kill. Full paths (not names): a part
-      // file moving between partition dirs must change the signature.
-      val it = fs.listFiles(p, true)
-      val parts = scala.collection.mutable.ArrayBuffer[String]()
-      while (it.hasNext) {
-        val st = it.next()
-        parts += s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
-      }
-      // fixed-width digest so the key stays bounded on many-file tables
-      java.util.Base64.getEncoder.encodeToString(
-        java.security.MessageDigest.getInstance("SHA-256")
-          .digest(parts.sorted.mkString("\n").getBytes("UTF-8")))
     }
   }
 
@@ -348,54 +275,28 @@ object CrawlPipeline {
   private def pilesFor(s: SparkSession, d: String,
       ticks: Seq[DataFrame],
       ptr: Boolean = false,
-      splitTag: String): (String, String, String) =
-    pileCache.synchronized {
-      // the fingerprint in the key makes a mid-JVM input regeneration
-      // impossible to read stale (r15 VERDICT ask #4): changed bytes
-      // under d → changed listing → new entry → fresh piles. The tick
-      // count AND the caller-supplied splitTag are in the key too
-      // (ADVICE r16 #3): the count separates two-tick (q258/q259) from
-      // three-tick (q260/q261) histories, and the tag separates two
-      // DIFFERENT same-count partitions of the same dataset — without
-      // it, a future caller splitting on a different predicate would
-      // silently read piles built from another split's micro-batches.
-      pileCache.getOrElseUpdate(
-        s"$d#${if (ptr) "ptr" else "text"}#t${ticks.size}#$splitTag#${inputFingerprint(s, d)}", {
-        pileDirSeq += 1
-        val work = s"$workRoot/p$pileDirSeq" + (if (ptr) "-ptr" else "")
-        val in = s"$work/in"
-        val lsh = s"$work/lsh"
-        val span = s"$work/span"
-        val shp = s"$work/shingles"
-        def tick(): Unit = {
-          Ingest.streamLshIngest(s, in, lsh, numHashes = 32, bandSize = 2)
-          if (ptr) Ingest.streamDupSpanMaintainPtr(s, in, span)
-          else Ingest.streamDupSpanMaintain(s, in, span)
-          Ingest.streamShingleIngest(s, in, shp)
-        }
-        // an empty tick (e.g. an all-batch fixture's empty corpus) is
-        // skipped: an empty frame can write zero part files, which
-        // would fail the stream's schema inference; later ticks then
-        // shift down a micro-batch and the probes see the same
-        // "everything ingested so far" state
-        for (t <- ticks if !t.isEmpty) {
-          t.write.mode("append").parquet(in)
-          tick()
-        }
-        Ingest.compactLshIndex(s, lsh)
-        if (ptr) Ingest.compactDupSpanStatePtrFold(s, span,
+      splitTag: String): (String, String, String) = {
+    // the tick count AND the caller-supplied splitTag are in the cache
+    // key (ADVICE r16 #3): the count separates two-tick (q258/q259)
+    // from three-tick (q260/q261) histories, and the tag separates two
+    // DIFFERENT same-count partitions of the same dataset
+    val work = PileCache.build(s, d, "documents",
+      s"${if (ptr) "ptr" else "text"}#t${ticks.size}#$splitTag", ticks)(
+      (in, work) => {
+        Ingest.streamLshIngest(s, in, s"$work/lsh", numHashes = 32, bandSize = 2)
+        if (ptr) Ingest.streamDupSpanMaintainPtr(s, in, s"$work/span")
+        else Ingest.streamDupSpanMaintain(s, in, s"$work/span")
+        Ingest.streamShingleIngest(s, in, s"$work/shingles")
+      },
+      work => {
+        Ingest.compactLshIndex(s, s"$work/lsh")
+        if (ptr) Ingest.compactDupSpanStatePtrFold(s, s"$work/span",
           ticks.reduce(_ unionByName _))
-        else Ingest.compactDupSpanState(s, span)
-        Ingest.compactShinglePile(s, shp)
-        // the staging copy and checkpoints are NOT in the probes'
-        // lineage (only the piles are) — delete them now
-        val fs = new org.apache.hadoop.fs.Path(work)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        Seq(in, s"$lsh-ckpt", s"$span-ckpt", s"$shp-ckpt").foreach(p =>
-          fs.delete(new org.apache.hadoop.fs.Path(p), true))
-        (lsh, span, shp)
+        else Ingest.compactDupSpanState(s, s"$work/span")
+        Ingest.compactShinglePile(s, s"$work/shingles")
       })
-    }
+    (s"$work/lsh", s"$work/span", s"$work/shingles")
+  }
 
   /** The capstone's first-principles DuckDB oracle, parameterized on
     * the batch-membership predicate (`batch`, over a bare `doc_id`)
@@ -536,7 +437,7 @@ object CrawlPipeline {
     // incrementally across its whole ingest history, so the headline
     // number measures the per-tick gate (the production recurring
     // cost), not one-off state construction. The warmup hits the same
-    // per-JVM pileCache the timed run reads — same paths, zero rebuild.
+    // PileCache entry the timed run reads — same paths, zero rebuild.
     val docsAll = Tables.documents(s, d)
     val corpus = docsAll.filter(pmod(col("doc_id"), lit(10)) < 8)
     val batch = docsAll.filter(pmod(col("doc_id"), lit(10)) >= 8)

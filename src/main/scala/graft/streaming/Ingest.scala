@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -145,25 +145,197 @@ object Ingest {
   }
 
   // ---------------------------------------------------------------
-  // Incremental IVF vector index (r16 VERDICT ask #2 — the one
-  // surface whose maintenance was batch-only while LSH / ExactSubstr /
-  // shingles / postings / agg-MV were all segment-incremental): the
-  // delta-merge posture applied to q58's inverted-file ANN index.
-  // Reference analog: per-segment vector index build during
-  // delta-merge rather than full rebuild
-  // (`/root/reference/dbms/src/Storages/DeltaMerge/Index/VectorIndex/`,
-  // `DeltaMergeStore_InternalBg.cpp`). The FIXED trained centroid set
-  // is the pile's identity — exactly what `_buckets`/`_banding` are to
-  // the hash piles: a probe or compactor assigning against different
-  // centroids computes incomparable list ids and silently drops
-  // matches. The centroids themselves (the trained-model artifact,
-  // k ≈ √N rows — broadcast-bounded by the q58 sizing rule) persist as
-  // a parquet sibling `<indexPath>-centroids` (like `-ckpt`, outside
-  // the promoted root), and their SHA-256 fingerprint rides every
-  // promoted generation as the `_centroids` marker; ingest and probe
-  // verify sibling-vs-marker before trusting either. Re-clustering for
-  // centroid drift is a separate offline rebuild, as in the
-  // reference's full index rebuild path.
+  // The segment pile: the one mechanism every incremental index and
+  // materialized view below is maintained through (≙ the reference
+  // keeping every table in one DeltaTree segment structure,
+  // `DeltaMergeStore`). A pile is a directory of immutable per-batch
+  // segments `seg=<batchId>` and, once compacted, one `seg=-1`
+  // generation; identity markers in its root record the parameters
+  // every ingest, compaction and probe must agree on. Families differ
+  // only in their [[SegmentPile]] value ([[Piles]]); ingest
+  // ([[ingestPile]]), compaction ([[compactPile]] through
+  // [[promoteCompacted]]) and marker handling are shared.
+
+  /** An identity marker: the file `name` in a pile's root, written
+    * before the first segment commits and carried into every compacted
+    * generation. `what` names the identity in refusals. A marker with
+    * `ints` > 0 holds that many integers, so a value that does not
+    * parse is refused as corrupt rather than as different. */
+  final case class Marker(name: String, what: String, ints: Int = 0)
+  object Marker {
+    /** The bucket-hash modulus: a probe or compactor recomputing it
+      * with a different value silently drops matches (rows land in
+      * partitions the reader never joins). */
+    val Buckets = Marker("_buckets", "bucket modulus", 1)
+    /** MinHash banding parameters: banding a batch with different
+      * (numHashes, bandSize) computes incomparable bucket keys. */
+    val Banding = Marker("_banding", "(numHashes, bandSize)", 2)
+    /** The fingerprint of an IVF pile's fixed centroid set. */
+    val Centroids = Marker("_centroids", "centroid set")
+  }
+
+  /** How a pile compacts into its one `seg=-1` generation. */
+  sealed trait Compaction
+  /** Rows are immutable facts: drop `seg`, repartition on the
+    * partition columns and rewrite — file-count hygiene, read-identical
+    * by construction (the Lucene-segment / delta-merge rewrite form). */
+  case object Rewrite extends Compaction
+  /** Rows are mergeable states: `view(spark, pile)` folds the pile
+    * into a generation its read view re-folds unchanged. `stamped`
+    * marks the generation `_folded` (one row per key), which the
+    * dup-span probe's fast path trusts. */
+  final case class Fold(view: (SparkSession, String) => DataFrame,
+      stamped: Boolean = false) extends Compaction
+
+  /** A pile family, parameterized by the identity `I` an ingest
+    * supplies: the per-batch segment transform, the partition columns
+    * of every segment and generation, the identity markers and their
+    * values, the compaction form, the stream-side `prep`, and an
+    * `artifact` step that runs after the markers are verified and
+    * before they are written (IVF's centroid sibling). */
+  final case class SegmentPile[I](
+      segment: I => DataFrame => DataFrame,
+      partitionCols: Seq[String] = Nil,
+      markers: Seq[(Marker, I => String)] = Nil,
+      compaction: Compaction = Rewrite,
+      prep: DataFrame => DataFrame = identity,
+      artifact: (SparkSession, String, I) => Unit =
+        (_: SparkSession, _: String, _: I) => ())
+
+  /** The pile families. Rows of the rewrite families are immutable
+    * per-document (or per-vector) facts; the fold families hold
+    * mergeable states. */
+  object Piles {
+    import graft.operators.{InvertedText, Similarity, TextPipeline}
+    private def bucketOf(c: Column, b: Int): Column = pmod(abs(hash(c)), lit(b))
+    private val buckets: Seq[(Marker, Int => String)] =
+      Seq(Marker.Buckets -> ((b: Int) => b.toString))
+    private def termBuckets(b: Int)(df: DataFrame): DataFrame =
+      df.withColumn("tbucket", bucketOf(col("term"), b))
+
+    /** IVF assignments to a fixed centroid set, per inverted list. The
+      * centroids persist beside the pile, before its marker. */
+    val ivf: SegmentPile[DataFrame] = SegmentPile(
+      cent => batch => Similarity.ivfAssign(batch, cent), Seq("cid"),
+      Seq(Marker.Centroids -> ((cent: DataFrame) => centroidFingerprint(cent))),
+      artifact = (spark, path, cent) => {
+        val sib = new org.apache.hadoop.fs.Path(centroidSiblingPath(path))
+        if (!sib.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(sib))
+          cent.write.mode("overwrite").parquet(sib.toString)
+      })
+    /** Boolean postings (term → sorted doc list, df); the fold merges
+      * the per-segment lists term by term. */
+    val postings: SegmentPile[Int] = SegmentPile(
+      b => batch => termBuckets(b)(InvertedText.buildPostings(batch)),
+      Seq("tbucket"), buckets,
+      Fold((spark, path) => termBuckets(bucketsOf(spark, path))(
+        mergePostingsSegments(spark.read.parquet(path).drop("tbucket", "seg")))))
+    /** (term, doc_id, tf, dl) rows for BM25. */
+    val tfPostings: SegmentPile[Int] = SegmentPile(
+      b => batch => termBuckets(b)(InvertedText.buildTfPostings(batch)),
+      Seq("tbucket"), buckets)
+    /** (term, doc_id, pos) occurrence rows for phrase search. */
+    val posPostings: SegmentPile[Int] = SegmentPile(
+      b => batch => termBuckets(b)(batch.select(col("doc_id"),
+        posexplode(split(trim(col("text")), "\\s+")).as(Seq("pos", "term")))),
+      Seq("tbucket"), buckets)
+    /** BM25's corpus constants as one mergeable-sum row per segment. */
+    val docStats: SegmentPile[Unit] = SegmentPile(_ => docStatsPartial,
+      compaction = Fold((spark, path) => docStatsView(spark.read.parquet(path))))
+    /** MinHash banding rows per (band, bucket-hash). */
+    val lsh: SegmentPile[(Int, Int, Int)] = SegmentPile(
+      { case (b, nh, bs) => batch => TextPipeline.minhashBands(batch, nh, bs)
+          .withColumn("bbucket", bucketOf(col("bucket"), b)) },
+      Seq("band", "bbucket"),
+      Seq(Marker.Buckets -> ((i: (Int, Int, Int)) => i._1.toString),
+        Marker.Banding -> ((i: (Int, Int, Int)) => s"${i._2} ${i._3}")))
+    /** Distinct 3-gram shingle sets of ≥ 3-token documents, per
+      * doc-id bucket. */
+    val shingles: SegmentPile[Int] = SegmentPile(
+      b => batch => batch.filter(size(TextPipeline.tokens) >= 3)
+        .select(col("doc_id"),
+          array_distinct(TextPipeline.shingles(TextPipeline.tokens, 3)).as("sh"))
+        .withColumn("dbucket", bucketOf(col("doc_id"), b)),
+      Seq("dbucket"), buckets)
+    /** ExactSubstr window counts keyed on (hash, window text); the fold
+      * sums them — its size-derived repartition on the group keys IS
+      * the aggregate's exchange — and stamps the generation. */
+    val dupSpan: SegmentPile[Column => Column] = SegmentPile(
+      hashOf => batch => TextPipeline.dupSpanPartial(batch, hashOf),
+      compaction = Fold((spark, path) => spark.read.parquet(path)
+          .repartition(foldPartitions(spark, path), col("hk"), col("g"))
+          .groupBy(col("hk"), col("g"))
+          .agg(sum(col("c")).cast("long").as("c")),
+        stamped = true))
+    /** Pointer-state window counts: per-(batch, text) rows cannot fold
+      * without the text, so auto-compaction rewrites; the true fold is
+      * [[compactDupSpanStatePtrFold]]. */
+    val dupSpanPtr: SegmentPile[Column => Column] = SegmentPile(
+      hashOf => batch => TextPipeline.dupSpanPartialPtr(batch, hashOf))
+    /** The events rollup's mergeable partial states. */
+    val aggMv: SegmentPile[Unit] = SegmentPile(_ => aggPartial,
+      compaction = Fold((spark, path) => aggViewOf(spark.read.parquet(path))),
+      prep = Tables.normalizeEventsTs)
+  }
+
+  /** Ingest every new micro-batch of `inputDir` into the pile at
+    * `path` as its own segment. Each marker is checked against the
+    * pile's before anything is written, and written before the first
+    * segment can commit: a crash at any point leaves a self-describing
+    * pile, never segments without identity. A pile whose live segment
+    * count reaches `autoCompactSegments` is then compacted. */
+  private def ingestPile[I](spark: SparkSession, pile: SegmentPile[I], id: I,
+      inputDir: String, path: String, autoCompactSegments: Int): Unit = {
+    val markers = pile.markers.map { case (m, value) => m -> value(id) }
+    markers.foreach { case (m, v) => requireConsistent(spark, path, m, v) }
+    pile.artifact(spark, path, id)
+    markers.foreach { case (m, v) => writeMarker(spark, markerPath(path, m), v) }
+    runAvailableNow(spark, inputDir, s"$path-ckpt", pile.prep) { (batch, batchId) =>
+      writeGeneration(pile.segment(id)(batch), pile.partitionCols, seg(path, batchId))
+    }
+    if (SegmentCompactionPolicy.shouldCompact(segmentIds(spark, path).size,
+        autoCompactSegments) && pileHasData(spark, path))
+      compactPile(spark, pile, path)
+  }
+
+  /** Compact the pile at `path` into one generation in its family's
+    * form. The live markers are read (or the compaction refused) and
+    * ride the new generation through [[promoteCompacted]]. */
+  private def compactPile(spark: SparkSession, pile: SegmentPile[_], path: String): Unit = {
+    val live = pile.markers.map { case (m, _) => m -> liveMarker(spark, path, m) }
+    requireCheckpointCaughtUp(spark, path)
+    promoteCompacted(spark, path, live) { tmp =>
+      pile.compaction match {
+        case Rewrite =>
+          val rows = spark.read.parquet(path).drop("seg")
+          val cols = pile.partitionCols.map(col)
+          writeGeneration(if (cols.isEmpty) rows else rows.repartition(cols: _*),
+            pile.partitionCols, compactedSeg(tmp))
+        case Fold(view, stamped) =>
+          writeGeneration(view(spark, path), pile.partitionCols, compactedSeg(tmp))
+          if (stamped) stampFolded(spark, compactedSeg(tmp))
+      }
+    }
+  }
+
+  private def writeGeneration(df: DataFrame, partitionCols: Seq[String], dir: String): Unit = {
+    val w = df.write.mode("overwrite")
+    (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*)).parquet(dir)
+  }
+
+  // ---------------------------------------------------------------
+  // Incremental IVF vector index: the delta-merge posture applied to
+  // q58's inverted-file ANN index (≙ per-segment vector index build
+  // during delta-merge, `Storages/DeltaMerge/Index/VectorIndex/`). The
+  // FIXED trained centroid set is the pile's identity, as
+  // `_buckets`/`_banding` are the hash piles': assigning against
+  // different centroids computes incomparable list ids and silently
+  // drops matches. The centroids (k ≈ √N rows, broadcast-bounded by the
+  // q58 sizing rule) persist as a parquet sibling `<indexPath>-centroids`
+  // outside the promoted root, and their SHA-256 fingerprint is the
+  // `_centroids` marker; ingest and probe verify sibling against marker
+  // before trusting either. Re-clustering for centroid drift is the
+  // offline rebuild [[rebuildIvfIndex]].
 
   /** Order-independent fingerprint of a centroid set: SHA-256 over the
     * sorted (cid, exact float bits) rows. The collect is k rows — the
@@ -182,24 +354,7 @@ object Ingest {
         .digest(parts.mkString("\n").getBytes("UTF-8")))
   }
 
-  private def centroidsMarkerPath(path: String) =
-    new org.apache.hadoop.fs.Path(path + "/_centroids")
-
   private def centroidSiblingPath(path: String) = s"$path-centroids"
-
-  private def requireConsistentCentroids(spark: SparkSession, path: String,
-      fp: String): Unit =
-    readMarker(spark, centroidsMarkerPath(path)) match {
-      case Some(stored) if stored != fp => throw new java.io.IOException(
-        s"IVF index at $path was built against a different centroid set " +
-          s"(stored fingerprint $stored, ingest supplied $fp); refusing — " +
-          "a mixed-quantizer pile assigns incomparable list ids. Rebuild " +
-          "the index to re-train centroids")
-      case None if segmentsPresent(spark, path) => throw new java.io.IOException(
-        s"IVF index at $path has segments but no _centroids marker; refusing " +
-          "to guess the quantizer — restore the marker or rebuild the pile")
-      case _ => ()
-    }
 
   /** Read the pile's trained centroid set from its sibling, verifying
     * it against the in-pile `_centroids` fingerprint first — the
@@ -207,9 +362,7 @@ object Ingest {
     * it unverified would let a swapped/corrupted artifact silently
     * re-route every probe. */
   def readIvfCentroids(spark: SparkSession, indexPath: String): DataFrame = {
-    val stored = readMarker(spark, centroidsMarkerPath(indexPath)).getOrElse(
-      throw new java.io.IOException(
-        s"IVF index at $indexPath has no _centroids marker; nothing to probe"))
+    val stored = liveMarker(spark, indexPath, Marker.Centroids)
     val sib = centroidSiblingPath(indexPath)
     val sibP = new org.apache.hadoop.fs.Path(sib)
     if (!sibP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(sibP))
@@ -237,47 +390,12 @@ object Ingest {
     * pile; ingest cost per batch is O(batch × k), never O(corpus). */
   def streamIvfIngest(spark: SparkSession, inputDir: String,
       indexPath: String, cent: DataFrame,
-      autoCompactSegments: Int = SegmentCompactionPolicy.DefaultMaxSegments): Unit = {
-    val fp = centroidFingerprint(cent)
-    requireConsistentCentroids(spark, indexPath, fp)
-    // artifact before marker, marker before the first segment commit
-    // (the r12 ask #2 ordering): a crash at any point leaves a
-    // self-describing pile — sibling-only (next ingest re-marks),
-    // sibling+marker (ready), never segments without identity
-    val sib = centroidSiblingPath(indexPath)
-    val sibP = new org.apache.hadoop.fs.Path(sib)
-    if (!sibP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(sibP))
-      cent.write.mode("overwrite").parquet(sib)
-    writeMarker(spark, centroidsMarkerPath(indexPath), fp)
-    runAvailableNow(spark, inputDir, s"$indexPath-ckpt") { (batch, id) =>
-      graft.operators.Similarity.ivfAssign(batch, cent)
-        .write.mode("overwrite").partitionBy("cid").parquet(seg(indexPath, id))
-    }
-    if (pileHasData(spark, indexPath) &&
-        SegmentCompactionPolicy.shouldCompact(segmentCount(spark, indexPath),
-          autoCompactSegments))
-      compactIvfIndex(spark, indexPath)
-  }
+      autoCompactSegments: Int = SegmentCompactionPolicy.DefaultMaxSegments): Unit =
+    ingestPile(spark, Piles.ivf, cent, inputDir, indexPath, autoCompactSegments)
 
-  /** Compact the IVF pile: assignment rows are immutable per-vector
-    * facts (no fold), so compaction rewrites the accumulated
-    * small-file segments as one generation per cid partition —
-    * read-identical by construction, file-count hygiene only (the
-    * Lucene-segment / delta-merge rewrite form, like the LSH and
-    * shingle piles). The `_centroids` identity marker rides the temp
-    * generation through the atomic promote. */
-  def compactIvfIndex(spark: SparkSession, indexPath: String): Unit = {
-    val fp = readMarker(spark, centroidsMarkerPath(indexPath)).getOrElse(
-      throw new java.io.IOException(
-        s"IVF index at $indexPath has no _centroids marker; refusing to compact"))
-    requireCheckpointCaughtUp(spark, indexPath)
-    promoteCompacted(spark, indexPath) { tmp =>
-      spark.read.parquet(indexPath).drop("seg")
-        .repartition(col("cid"))
-        .write.mode("overwrite").partitionBy("cid").parquet(compactedSeg(tmp))
-      writeMarker(spark, centroidsMarkerPath(tmp), fp)
-    }
-  }
+  /** Compact the IVF pile: rewrite, per cid partition. */
+  def compactIvfIndex(spark: SparkSession, indexPath: String): Unit =
+    compactPile(spark, Piles.ivf, indexPath)
 
   /** ANN probe against the maintained IVF pile — the production read:
     * per query, the nProbe nearest centroids (an O(|Q| × k) broadcast
@@ -358,12 +476,11 @@ object Ingest {
     val next = new org.apache.hadoop.fs.Path(centroidSiblingPath(indexPath) + ".next")
     val fs = sib.getFileSystem(spark.sparkContext.hadoopConfiguration)
     newCent.write.mode("overwrite").parquet(next.toString)
-    promoteCompacted(spark, indexPath) { tmp =>
+    promoteCompacted(spark, indexPath, Seq(Marker.Centroids -> fp)) { tmp =>
       graft.operators.Similarity.ivfAssign(
           spark.read.parquet(indexPath).select(col("vec_id"), col("embedding")),
           newCent)
         .write.mode("overwrite").partitionBy("cid").parquet(compactedSeg(tmp))
-      writeMarker(spark, centroidsMarkerPath(tmp), fp)
     }
     fs.delete(sib, true)
     if (!fs.rename(next, sib)) throw new java.io.IOException(
@@ -383,9 +500,7 @@ object Ingest {
     val sib = new org.apache.hadoop.fs.Path(sibStr)
     val next = new org.apache.hadoop.fs.Path(sibStr + ".next")
     val fs = sib.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = readMarker(spark, centroidsMarkerPath(indexPath)).getOrElse(
-      throw new java.io.IOException(
-        s"recoverIvfRebuild: $indexPath has no _centroids marker — not an IVF pile"))
+    val marker = liveMarker(spark, indexPath, Marker.Centroids)
     def fpOf(p: org.apache.hadoop.fs.Path): Option[String] =
       if (!fs.exists(p)) None
       else Some(centroidFingerprint(spark.read.parquet(p.toString)))
@@ -442,48 +557,26 @@ object Ingest {
       val pruned = spark.read.parquet(indexPath)
         .filter(col("cid").isin(touched: _*))
         .select(col("vec_id").as("old_id"), col("embedding").as("ov"), col("cid"))
-      val out = assigned.hint("shuffle_hash").join(pruned, Seq("cid"))
-        .filter(col("new_id") =!= col("old_id"))
-        .withColumn("sim", lit(1.0) - vec_cosine_distance(col("nv"), col("ov")))
-        .filter(col("sim") > simThreshold)
-        .select(col("new_id"), col("old_id"), round(col("sim"), 6).as("sim"))
-        .persist()
-      try out.count() // candidate-bounded result; swept by the harness
-      catch { case t: Throwable => out.unpersist(blocking = false); throw t }
-      out
+      graft.CacheHygiene.materialized(
+        assigned.hint("shuffle_hash").join(pruned, Seq("cid"))
+          .filter(col("new_id") =!= col("old_id"))
+          .withColumn("sim", lit(1.0) - vec_cosine_distance(col("nv"), col("ov")))
+          .filter(col("sim") > simThreshold)
+          .select(col("new_id"), col("old_id"), round(col("sim"), 6).as("sim")))
     } finally assigned.unpersist(blocking = true)
   }
 
-  /** Incremental FULL-TEXT index maintenance, same delta-merge posture
-    * as `streamIndexIngest` but for the inverted index: each micro-batch
-    * builds postings over its OWN documents only and appends them as an
-    * immutable SEGMENT, partitioned by a term-hash bucket. Existing
-    * segment files are never rewritten; a term probe partition-prunes to
-    * the term's bucket and read-side `mergePostingsSegments` unions the
-    * per-segment lists (the Lucene segment model — offline compaction
-    * folds segments together, exactly like the reference building
-    * storage indexes during delta-merge rather than rebuilding,
-    * `DeltaMergeStore_InternalBg.cpp`). Ingest cost per batch is
+  /** Incremental FULL-TEXT index maintenance: each micro-batch builds
+    * postings over its OWN documents only and appends them as an
+    * immutable segment, partitioned by a term-hash bucket. A term probe
+    * partition-prunes to the term's bucket and read-side
+    * `mergePostingsSegments` unions the per-segment lists (the Lucene
+    * segment model; compaction folds them). Ingest cost per batch is
     * O(batch tokens), never O(corpus). */
   def streamPostingsIngest(spark: SparkSession, inputDir: String,
       indexPath: String, buckets: Int = 16,
-      autoCompactSegments: Int = SegmentCompactionPolicy.DefaultMaxSegments): Unit = {
-    requireConsistentBuckets(spark, indexPath, buckets)
-    // the marker is written BEFORE the first segment can commit (r12
-    // VERDICT ask #2): a crash mid-first-ingest then leaves marker +
-    // partial segments — still self-describing — instead of a
-    // marker-less pile a later ingest would silently re-key
-    writeBucketsMarker(spark, indexPath, buckets)
-    runAvailableNow(spark, inputDir, s"$indexPath-ckpt") { (batch, id) =>
-      graft.operators.InvertedText.buildPostings(batch)
-        .withColumn("tbucket", pmod(abs(hash(col("term"))), lit(buckets)))
-        .write.mode("overwrite").partitionBy("tbucket").parquet(seg(indexPath, id))
-    }
-    if (pileHasData(spark, indexPath) &&
-        SegmentCompactionPolicy.shouldCompact(segmentCount(spark, indexPath),
-          autoCompactSegments))
-      compactPostings(spark, indexPath, buckets)
-  }
+      autoCompactSegments: Int = SegmentCompactionPolicy.DefaultMaxSegments): Unit =
+    ingestPile(spark, Piles.postings, buckets, inputDir, indexPath, autoCompactSegments)
 
   /** Incremental TF-POSTINGS pile — the ranked-retrieval (BM25) side
     * of the inverted index (≙ the reference's scored FullTextIndex
@@ -499,35 +592,12 @@ object Ingest {
     * companion [[streamDocStatsIngest]] stats pile. */
   def streamTfPostingsIngest(spark: SparkSession, inputDir: String,
       indexPath: String, buckets: Int = 16,
-      autoCompactSegments: Int = SegmentCompactionPolicy.DefaultMaxSegments): Unit = {
-    requireConsistentBuckets(spark, indexPath, buckets)
-    writeBucketsMarker(spark, indexPath, buckets)
-    runAvailableNow(spark, inputDir, s"$indexPath-ckpt") { (batch, id) =>
-      graft.operators.InvertedText.buildTfPostings(batch)
-        .withColumn("tbucket", pmod(abs(hash(col("term"))), lit(buckets)))
-        .write.mode("overwrite").partitionBy("tbucket").parquet(seg(indexPath, id))
-    }
-    if (pileHasData(spark, indexPath) &&
-        SegmentCompactionPolicy.shouldCompact(segmentCount(spark, indexPath),
-          autoCompactSegments))
-      compactTfPostings(spark, indexPath)
-  }
+      autoCompactSegments: Int = SegmentCompactionPolicy.DefaultMaxSegments): Unit =
+    ingestPile(spark, Piles.tfPostings, buckets, inputDir, indexPath, autoCompactSegments)
 
-  /** Compact the tf-postings pile: rows are immutable per-(doc, term)
-    * facts (no fold), so compaction rewrites accumulated small-file
-    * segments as one generation per tbucket partition — file-count
-    * hygiene, read-identical by construction (the LSH/shingle rewrite
-    * form). */
-  def compactTfPostings(spark: SparkSession, indexPath: String): Unit = {
-    val b = readBucketsMarker(spark, indexPath, 16)
-    requireCheckpointCaughtUp(spark, indexPath)
-    promoteCompacted(spark, indexPath) { tmp =>
-      spark.read.parquet(indexPath).drop("seg")
-        .repartition(col("tbucket"))
-        .write.mode("overwrite").partitionBy("tbucket").parquet(compactedSeg(tmp))
-      writeBucketsMarker(spark, tmp, b)
-    }
-  }
+  /** Compact the tf-postings pile: rewrite, per tbucket partition. */
+  def compactTfPostings(spark: SparkSession, indexPath: String): Unit =
+    compactPile(spark, Piles.tfPostings, indexPath)
 
   /** Per-batch corpus-stats partial for BM25's (N, avgdl): document
     * count and total token length — two mergeable sums, the keyless
@@ -549,25 +619,12 @@ object Ingest {
     * (associative + commutative). */
   def streamDocStatsIngest(spark: SparkSession, inputDir: String,
       statePath: String,
-      autoCompactSegments: Int = SegmentCompactionPolicy.DefaultMaxSegments): Unit = {
-    runAvailableNow(spark, inputDir, s"$statePath-ckpt") { (batch, id) =>
-      docStatsPartial(batch).write.mode("overwrite").parquet(seg(statePath, id))
-    }
-    if (pileHasData(spark, statePath) &&
-        SegmentCompactionPolicy.shouldCompact(segmentCount(spark, statePath),
-          autoCompactSegments))
-      compactDocStats(spark, statePath)
-  }
+      autoCompactSegments: Int = SegmentCompactionPolicy.DefaultMaxSegments): Unit =
+    ingestPile(spark, Piles.docStats, (), inputDir, statePath, autoCompactSegments)
 
-  /** Collapse the doc-stats pile to its one folded row (read-identical;
-    * crash safety via [[promoteCompacted]]). */
-  def compactDocStats(spark: SparkSession, statePath: String): Unit = {
-    requireCheckpointCaughtUp(spark, statePath)
-    promoteCompacted(spark, statePath) { tmp =>
-      docStatsView(spark.read.parquet(statePath))
-        .write.mode("overwrite").parquet(compactedSeg(tmp))
-    }
-  }
+  /** Compact the doc-stats pile: fold to its one (n_docs, total_len) row. */
+  def compactDocStats(spark: SparkSession, statePath: String): Unit =
+    compactPile(spark, Piles.docStats, statePath)
 
   /** BM25-ranked retrieval served from the maintained piles — the
     * production recurring read of ranked full-text search on a live
@@ -586,7 +643,7 @@ object Ingest {
     if (!pileHasData(spark, indexPath) || !pileHasData(spark, statsPath))
       return spark.range(0).select(col("id").as("doc_id"),
         col("id").as("n_terms"), col("id").cast("double").as("bm25"))
-    val b = readBucketsMarker(spark, indexPath, 16)
+    val b = bucketsOf(spark, indexPath)
     import spark.implicits._
     // |terms|-row driver-side bucket computation (the q264 discipline):
     // literals reach the pile scan as partition filters
@@ -627,33 +684,12 @@ object Ingest {
     * posting sizes, never corpus size. */
   def streamPosPostingsIngest(spark: SparkSession, inputDir: String,
       indexPath: String, buckets: Int = 16,
-      autoCompactSegments: Int = SegmentCompactionPolicy.DefaultMaxSegments): Unit = {
-    requireConsistentBuckets(spark, indexPath, buckets)
-    writeBucketsMarker(spark, indexPath, buckets)
-    runAvailableNow(spark, inputDir, s"$indexPath-ckpt") { (batch, id) =>
-      batch.select(col("doc_id"),
-          posexplode(split(trim(col("text")), "\\s+")).as(Seq("pos", "term")))
-        .withColumn("tbucket", pmod(abs(hash(col("term"))), lit(buckets)))
-        .write.mode("overwrite").partitionBy("tbucket").parquet(seg(indexPath, id))
-    }
-    if (pileHasData(spark, indexPath) &&
-        SegmentCompactionPolicy.shouldCompact(segmentCount(spark, indexPath),
-          autoCompactSegments))
-      compactPosPostings(spark, indexPath)
-  }
+      autoCompactSegments: Int = SegmentCompactionPolicy.DefaultMaxSegments): Unit =
+    ingestPile(spark, Piles.posPostings, buckets, inputDir, indexPath, autoCompactSegments)
 
-  /** Compact the positional pile: occurrence rows are immutable facts
-    * (no fold) — the tbucket-partitioned rewrite form. */
-  def compactPosPostings(spark: SparkSession, indexPath: String): Unit = {
-    val b = readBucketsMarker(spark, indexPath, 16)
-    requireCheckpointCaughtUp(spark, indexPath)
-    promoteCompacted(spark, indexPath) { tmp =>
-      spark.read.parquet(indexPath).drop("seg")
-        .repartition(col("tbucket"))
-        .write.mode("overwrite").partitionBy("tbucket").parquet(compactedSeg(tmp))
-      writeBucketsMarker(spark, tmp, b)
-    }
-  }
+  /** Compact the positional pile: rewrite, per tbucket partition. */
+  def compactPosPostings(spark: SparkSession, indexPath: String): Unit =
+    compactPile(spark, Piles.posPostings, indexPath)
 
   /** Exact-phrase search served from the maintained positional pile:
     * occurrences of `second` at `first`'s position + 1, both sides
@@ -666,7 +702,7 @@ object Ingest {
     if (!pileHasData(spark, indexPath))
       return spark.range(0).select(col("id").as("doc_id"),
         col("id").as("n_occurrences"))
-    val b = readBucketsMarker(spark, indexPath, 16)
+    val b = bucketsOf(spark, indexPath)
     import spark.implicits._
     val tb = Seq(first, second).toDF("term")
       .select(pmod(abs(hash(col("term"))), lit(b)).cast("int"))
@@ -704,32 +740,14 @@ object Ingest {
   def streamLshIngest(spark: SparkSession, inputDir: String,
       indexPath: String, buckets: Int = 16,
       numHashes: Int = 16, bandSize: Int = 4,
-      autoCompactSegments: Int = SegmentCompactionPolicy.DefaultMaxSegments): Unit = {
-    requireConsistentBuckets(spark, indexPath, buckets)
-    requireConsistentBanding(spark, indexPath, numHashes, bandSize)
-    // markers BEFORE the first segment commit (r12 VERDICT ask #2) —
-    // a crash window can no longer produce a marker-less segment pile
-    writeBucketsMarker(spark, indexPath, buckets)
-    writeBandingMarker(spark, indexPath, numHashes, bandSize)
-    runAvailableNow(spark, inputDir, s"$indexPath-ckpt") { (batch, id) =>
-      graft.operators.TextPipeline.minhashBands(batch, numHashes, bandSize)
-        .withColumn("bbucket", pmod(abs(hash(col("bucket"))), lit(buckets)))
-        .write.mode("overwrite").partitionBy("band", "bbucket")
-        .parquet(seg(indexPath, id))
-    }
-    if (pileHasData(spark, indexPath) &&
-        SegmentCompactionPolicy.shouldCompact(segmentCount(spark, indexPath),
-          autoCompactSegments))
-      compactLshIndex(spark, indexPath, buckets)
-  }
+      autoCompactSegments: Int = SegmentCompactionPolicy.DefaultMaxSegments): Unit =
+    ingestPile(spark, Piles.lsh, (buckets, numHashes, bandSize), inputDir, indexPath,
+      autoCompactSegments)
 
-  /** The bucket-hash modulus is part of an index's identity: a probe
-    * or compactor recomputing it with a different value silently drops
-    * matches (rows land in partitions the reader never joins). Persist
-    * it as an underscore-prefixed marker (invisible to the parquet
-    * reader, like _SUCCESS) and refuse mixed-modulus ingest. */
-  private def bucketsMarkerPath(path: String) =
-    new org.apache.hadoop.fs.Path(path + "/_buckets")
+  /** Identity markers are underscore-prefixed files, invisible to the
+    * parquet reader like _SUCCESS. */
+  private def markerPath(path: String, m: Marker) =
+    new org.apache.hadoop.fs.Path(s"$path/${m.name}")
 
   private def readMarker(spark: SparkSession,
       p: org.apache.hadoop.fs.Path): Option[String] = {
@@ -742,15 +760,61 @@ object Ingest {
     }
   }
 
+  /** The integers of an integer marker; anything else (a torn write
+    * leaves a 0-byte file) is refused loudly and prescriptively, never
+    * as a bare parse error. */
+  private def markerInts(path: String, m: Marker, s: String): Seq[Int] = {
+    val parts = s.split("\\s+").toSeq
+    val ints = parts.flatMap(_.toIntOption)
+    if (m.ints > 0 && (parts.size != m.ints || ints.size != m.ints))
+      throw new java.io.IOException(
+        s"corrupt ${m.name} marker at $path (content: '$s'); restore it or rebuild the pile")
+    ints
+  }
+
+  private def missingMarker(path: String, m: Marker) = new java.io.IOException(
+    s"pile at $path has segments but no ${m.name} marker; refusing to guess its " +
+      s"${m.what} — restore the marker or rebuild the pile")
+
+  /** The pile's marker `m`, checked for corruption. A missing marker is
+    * refused: markers are written before the first segment can commit,
+    * so a pile that holds data without one is foreign or corrupted, and
+    * guessing its identity is exactly the silent match-dropping the
+    * marker exists to prevent. */
+  private def liveMarker(spark: SparkSession, path: String, m: Marker): String = {
+    val s = readMarker(spark, markerPath(path, m)).getOrElse(throw missingMarker(path, m))
+    markerInts(path, m, s)
+    s
+  }
+
+  private[streaming] def bucketsOf(spark: SparkSession, path: String): Int =
+    markerInts(path, Marker.Buckets, liveMarker(spark, path, Marker.Buckets)).head
+
+  /** Refuse an ingest whose identity differs from the pile's, or into
+    * a pile that has segments but no marker to verify it against. An
+    * empty or absent pile passes: its markers are about to be created. */
+  private def requireConsistent(spark: SparkSession, path: String, m: Marker,
+      value: String): Unit =
+    readMarker(spark, markerPath(path, m)) match {
+      case Some(stored) if stored != value =>
+        markerInts(path, m, stored)
+        throw new java.io.IOException(
+          s"pile at $path was built with a different ${m.what} ($stored); refusing " +
+            s"ingest with $value — a pile mixing them assigns incomparable keys and " +
+            "silently drops matches. Rebuild the pile to change it")
+      case None if segmentsPresent(spark, path) => throw missingMarker(path, m)
+      case _ => ()
+    }
+
   /** Marker writes are crash-atomic and idempotent: a marker's value
-    * can never legally change once written (requireConsistent* verified
+    * can never legally change once written (requireConsistent verified
     * equality first), so an existing marker is left untouched — a
     * truncate-and-rewrite on every tick would open a crash window that
     * leaves a 0-byte marker (and a torn concurrent read could parse a
     * PREFIX of the value, silently dropping matches). Fresh markers are
     * written to a temp sibling and renamed into place.
     *
-    * Race hardening (ADVICE r13 #2): requireConsistent* passes on an
+    * Race hardening (ADVICE r13 #2): requireConsistent passes on an
     * EMPTY pile, so two concurrent FIRST ingests with different
     * identities both reach this writer — treating the loser as a
     * same-value writer would let it continue ingesting with its own
@@ -770,7 +834,7 @@ object Ingest {
           "empty pile; pick ONE identity and rebuild before ingesting further")
     }
     // immutable once present — but verify, don't assume: the marker may
-    // have appeared between the caller's requireConsistent* check and
+    // have appeared between the caller's requireConsistent check and
     // now (the concurrent-first-ingest window)
     if (fs.exists(p)) { verifySurviving(); return }
     val tmp = new org.apache.hadoop.fs.Path(p.toString + ".tmp")
@@ -780,75 +844,6 @@ object Ingest {
       fs.delete(tmp, true)
       verifySurviving() // lost the rename race: only a same-value winner is legal
     }
-  }
-
-  private def writeBucketsMarker(spark: SparkSession, path: String,
-      buckets: Int): Unit =
-    writeMarker(spark, bucketsMarkerPath(path), buckets.toString)
-
-  /** Read a pile's bucket-hash modulus. A pile that HAS segments but
-    * NO marker is refused loudly (r12 VERDICT ask #2): since markers
-    * are written before the first segment can commit, that state means
-    * a foreign/corrupted pile — defaulting to the caller's value is
-    * exactly the silent mixed-modulus match-dropping the marker exists
-    * to prevent. An empty/absent pile returns the caller's value (the
-    * marker is about to be created). */
-  private def readBucketsMarker(spark: SparkSession, path: String,
-      default: Int): Int =
-    readMarker(spark, bucketsMarkerPath(path)) match {
-      case Some(s) =>
-        try s.toInt catch { case _: NumberFormatException =>
-          throw new java.io.IOException( // loud, prescriptive — never a bare parse error
-            s"corrupt _buckets marker at $path (content: '$s'); restore it or rebuild the pile")
-        }
-      case None =>
-        if (segmentsPresent(spark, path)) throw new java.io.IOException(
-          s"index at $path has segments but no _buckets marker; refusing to " +
-            "guess the bucket modulus — restore the marker or rebuild the pile")
-        default
-    }
-
-  private def requireConsistentBuckets(spark: SparkSession, path: String,
-      buckets: Int): Unit = {
-    val stored = readBucketsMarker(spark, path, buckets)
-    if (stored != buckets) throw new java.io.IOException(
-      s"index at $path was built with buckets=$stored; refusing ingest with buckets=$buckets")
-  }
-
-  /** MinHash banding parameters are part of an LSH index's identity for
-    * the same reason the bucket modulus is: a probe banding its batch
-    * with different (numHashes, bandSize) computes incomparable bucket
-    * keys and silently drops every match. Persisted alongside
-    * `_buckets`, enforced on ingest, read (never guessed) by probes. */
-  private def bandingMarkerPath(path: String) =
-    new org.apache.hadoop.fs.Path(path + "/_banding")
-
-  private def writeBandingMarker(spark: SparkSession, path: String,
-      numHashes: Int, bandSize: Int): Unit =
-    writeMarker(spark, bandingMarkerPath(path), s"$numHashes $bandSize")
-
-  private def readBandingMarker(spark: SparkSession, path: String,
-      default: (Int, Int)): (Int, Int) =
-    readMarker(spark, bandingMarkerPath(path)) match {
-      case Some(s) =>
-        try { val parts = s.split("\\s+"); (parts(0).toInt, parts(1).toInt) }
-        catch { case _: RuntimeException =>
-          throw new java.io.IOException(
-            s"corrupt _banding marker at $path (content: '$s'); restore it or rebuild the pile")
-        }
-      case None =>
-        if (segmentsPresent(spark, path)) throw new java.io.IOException(
-          s"LSH index at $path has segments but no _banding marker; refusing " +
-            "to guess (numHashes, bandSize) — restore the marker or rebuild")
-        default
-    }
-
-  private def requireConsistentBanding(spark: SparkSession, path: String,
-      numHashes: Int, bandSize: Int): Unit = {
-    val stored = readBandingMarker(spark, path, (numHashes, bandSize))
-    if (stored != ((numHashes, bandSize))) throw new java.io.IOException(
-      s"LSH index at $path was built with (numHashes, bandSize)=$stored; " +
-        s"refusing ingest with (${numHashes}, ${bandSize})")
   }
 
   /** seg=N (N ≥ 0) directories currently in a pile — the ingested,
@@ -869,9 +864,6 @@ object Ingest {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith("seg="))
   }
-
-  private def segmentCount(spark: SparkSession, path: String): Long =
-    segmentIds(spark, path).size.toLong
 
   /** True iff the pile holds at least one parquet data file. An
     * EMPTY-batch ingest can commit a segment directory with no part
@@ -981,12 +973,12 @@ object Ingest {
     if (!pileHasData(spark, indexPath))
       return spark.range(0)
         .select(col("id").as("new_doc"), col("id").as("old_doc"))
-    // modulus AND banding params are part of the index's identity —
     // read the markers, never guess (a mismatched recompute drops
-    // matches silently). Segments are present here, so a missing
-    // marker throws inside the readers; the defaults are unreachable.
-    val b = readBucketsMarker(spark, indexPath, -1)
-    val (nh, bs) = readBandingMarker(spark, indexPath, (-1, -1))
+    // matches silently); segments are present here, so a missing
+    // marker is refused
+    val b = bucketsOf(spark, indexPath)
+    val Seq(nh, bs) = markerInts(indexPath, Marker.Banding,
+      liveMarker(spark, indexPath, Marker.Banding))
     // the banding job is O(batch shingles) — the probe's advertised
     // cost. It feeds TWO consumers (the touched-partition collect and
     // the join's probe side), so persist it for the probe's lifetime
@@ -1053,14 +1045,12 @@ object Ingest {
       // Materialize the (bounded: candidate-pair-sized) result while the
       // banding cache is alive, then release it; the small persisted
       // result is swept by the harness after use.
-      val out = probe.join(idx.hint("shuffle_hash"), Seq("band", "bbucket", "bucket"))
-        .select(col("new_doc"), explode(col("old_ids")).as("old_doc"))
-        .filter(col("new_doc") =!= col("old_doc"))
-        .distinct()
-        .persist()
-      try out.count()
-      catch { case t: Throwable =>
-        out.unpersist(blocking = false)
+      try graft.CacheHygiene.materialized(
+        probe.join(idx.hint("shuffle_hash"), Seq("band", "bbucket", "bucket"))
+          .select(col("new_doc"), explode(col("old_ids")).as("old_doc"))
+          .filter(col("new_doc") =!= col("old_doc"))
+          .distinct())
+      catch { case scala.util.control.NonFatal(t) =>
         // the fused guard surfaces as a task-level SparkRuntimeException
         // wrapped by the job failure — re-raise it as the documented
         // prescriptive refusal (API contract unchanged vs the old
@@ -1076,7 +1066,6 @@ object Ingest {
           .foreach(m => throw new java.io.IOException("lshProbe: " + m))
         throw t
       }
-      out
     } finally probe.unpersist(blocking = true)
   }
 
@@ -1131,22 +1120,8 @@ object Ingest {
     * is O(batch tokens), never O(corpus). */
   def streamShingleIngest(spark: SparkSession, inputDir: String,
       pilePath: String, buckets: Int = 16,
-      autoCompactSegments: Int = SegmentCompactionPolicy.DefaultMaxSegments): Unit = {
-    requireConsistentBuckets(spark, pilePath, buckets)
-    writeBucketsMarker(spark, pilePath, buckets)
-    runAvailableNow(spark, inputDir, s"$pilePath-ckpt") { (batch, id) =>
-      import graft.operators.TextPipeline
-      batch.filter(size(TextPipeline.tokens) >= 3)
-        .select(col("doc_id"),
-          array_distinct(TextPipeline.shingles(TextPipeline.tokens, 3)).as("sh"))
-        .withColumn("dbucket", pmod(abs(hash(col("doc_id"))), lit(buckets)))
-        .write.mode("overwrite").partitionBy("dbucket").parquet(seg(pilePath, id))
-    }
-    if (pileHasData(spark, pilePath) &&
-        SegmentCompactionPolicy.shouldCompact(segmentCount(spark, pilePath),
-          autoCompactSegments))
-      compactShinglePile(spark, pilePath)
-  }
+      autoCompactSegments: Int = SegmentCompactionPolicy.DefaultMaxSegments): Unit =
+    ingestPile(spark, Piles.shingles, buckets, inputDir, pilePath, autoCompactSegments)
 
   /** Point-read of candidate partners' shingle sets: `ids` (one
     * `old_doc` column, candidate-bounded) is hashed to its touched
@@ -1169,7 +1144,7 @@ object Ingest {
         .select(col("id").as("old_doc"),
           array().cast("array<string>").as("sh"))
     }
-    val b = readBucketsMarker(spark, pilePath, -1)
+    val b = bucketsOf(spark, pilePath)
     val want = ids.select(col("old_doc")).distinct()
       .withColumn("dbucket", pmod(abs(hash(col("old_doc"))), lit(b)))
       .persist()
@@ -1184,32 +1159,16 @@ object Ingest {
       // any SF; keep the exchange keyed on the high-cardinality doc id.
       // Materialize (candidate-bounded rows) while the `want` cache is
       // alive; the small persisted result is swept by the caller.
-      val out = spark.read.parquet(pilePath).filter(prune)
+      graft.CacheHygiene.materialized(spark.read.parquet(pilePath).filter(prune)
         .join(want.select(col("old_doc")).hint("shuffle_hash"),
           col("doc_id") === col("old_doc"), "left_semi")
-        .select(col("doc_id").as("old_doc"), col("sh"))
-        .persist()
-      try out.count()
-      catch { case t: Throwable => out.unpersist(blocking = false); throw t }
-      out
+        .select(col("doc_id").as("old_doc"), col("sh")))
     } finally want.unpersist(blocking = true)
   }
 
-  /** Compact the shingle pile: rows are immutable per-document facts
-    * (no fold), so compaction rewrites the accumulated small-file
-    * segments as one generation per dbucket partition — read-identical
-    * by construction. The `_buckets` marker rides the temp generation
-    * through the atomic promote. */
-  def compactShinglePile(spark: SparkSession, pilePath: String): Unit = {
-    val b = readBucketsMarker(spark, pilePath, 16)
-    requireCheckpointCaughtUp(spark, pilePath)
-    promoteCompacted(spark, pilePath) { tmp =>
-      spark.read.parquet(pilePath).drop("seg")
-        .repartition(col("dbucket"))
-        .write.mode("overwrite").partitionBy("dbucket").parquet(compactedSeg(tmp))
-      writeBucketsMarker(spark, tmp, b)
-    }
-  }
+  /** Compact the shingle pile: rewrite, per dbucket partition. */
+  def compactShinglePile(spark: SparkSession, pilePath: String): Unit =
+    compactPile(spark, Piles.shingles, pilePath)
 
   /** Incremental ExactSubstr (q215) index maintenance — the
     * delta-merge posture applied to the Lee-et-al dup-span pass: each
@@ -1227,16 +1186,8 @@ object Ingest {
       statePath: String,
       hashOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         xxhash64(_),
-      autoCompactSegments: Int = SegmentCompactionPolicy.DefaultMaxSegments): Unit = {
-    runAvailableNow(spark, inputDir, s"$statePath-ckpt") { (batch, id) =>
-      graft.operators.TextPipeline.dupSpanPartial(batch, hashOf)
-        .write.mode("overwrite").parquet(seg(statePath, id))
-    }
-    if (pileHasData(spark, statePath) &&
-        SegmentCompactionPolicy.shouldCompact(segmentCount(spark, statePath),
-          autoCompactSegments))
-      compactDupSpanState(spark, statePath)
-  }
+      autoCompactSegments: Int = SegmentCompactionPolicy.DefaultMaxSegments): Unit =
+    ingestPile(spark, Piles.dupSpan, hashOf, inputDir, statePath, autoCompactSegments)
 
   /** Fold the window segments to the duplicated-WINDOW set: total
     * count ≥ 2 grouped on (hash, window text) — identical to running
@@ -1314,26 +1265,15 @@ object Ingest {
   // hk remain separate state ROWS (the partial grouped on (hk, g)
   // before dropping g), so counts never pool across a collision.
 
-  /** Pointer-state maintenance; same segment/replay/compaction
-    * lifecycle as [[streamDupSpanMaintain]]. Auto-compaction uses the
-    * REWRITE form (file-count hygiene — rows are per-(batch, text)
-    * facts that cannot fold without the text); the true delta-merge
-    * fold is [[compactDupSpanStatePtrFold]], which re-fetches texts
-    * from the corpus (an offline background job by design). */
+  /** Pointer-state maintenance ([[Piles.dupSpanPtr]]); the true
+    * delta-merge fold is [[compactDupSpanStatePtrFold]], which
+    * re-fetches texts from the corpus (an offline job by design). */
   def streamDupSpanMaintainPtr(spark: SparkSession, inputDir: String,
       statePath: String,
       hashOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         xxhash64(_),
-      autoCompactSegments: Int = SegmentCompactionPolicy.DefaultMaxSegments): Unit = {
-    runAvailableNow(spark, inputDir, s"$statePath-ckpt") { (batch, id) =>
-      graft.operators.TextPipeline.dupSpanPartialPtr(batch, hashOf)
-        .write.mode("overwrite").parquet(seg(statePath, id))
-    }
-    if (pileHasData(spark, statePath) &&
-        SegmentCompactionPolicy.shouldCompact(segmentCount(spark, statePath),
-          autoCompactSegments))
-      compactDupSpanStatePtr(spark, statePath)
-  }
+      autoCompactSegments: Int = SegmentCompactionPolicy.DefaultMaxSegments): Unit =
+    ingestPile(spark, Piles.dupSpanPtr, hashOf, inputDir, statePath, autoCompactSegments)
 
   /** Pointer-state dedup-at-ingest probe — semantics identical to
     * [[dupSpanProbe]] (collision-EXACT maximal dup spans of the batch
@@ -1408,17 +1348,10 @@ object Ingest {
     graft.operators.TextPipeline.mergeSpans(hits)
   }
 
-  /** Rewrite-form compaction for the pointer pile: consolidates the
-    * accumulated small-file segments into one generation WITHOUT
-    * folding (per-(batch, text) rows cannot merge text-free) —
-    * read-identical by construction, file-count hygiene only. */
-  def compactDupSpanStatePtr(spark: SparkSession, statePath: String): Unit = {
-    requireCheckpointCaughtUp(spark, statePath)
-    promoteCompacted(spark, statePath) { tmp =>
-      spark.read.parquet(statePath).drop("seg")
-        .write.mode("overwrite").parquet(compactedSeg(tmp))
-    }
-  }
+  /** Compact the pointer-state dup-span pile: rewrite, without
+    * folding (per-(batch, text) rows cannot merge text-free). */
+  def compactDupSpanStatePtr(spark: SparkSession, statePath: String): Unit =
+    compactPile(spark, Piles.dupSpanPtr, statePath)
 
   /** Fold-form compaction for the pointer pile — the true delta-merge:
     * collapses the per-batch partial rows to one row per distinct
@@ -1472,7 +1405,7 @@ object Ingest {
   def compactDupSpanStatePtrFold(spark: SparkSession, statePath: String,
       corpusDocs: DataFrame): Unit = {
     requireCheckpointCaughtUp(spark, statePath)
-    promoteCompacted(spark, statePath) { tmp =>
+    promoteCompacted(spark, statePath, Nil) { tmp =>
       val staging = s"$tmp/prefold-staging"
       spark.read.parquet(statePath).drop("seg")
         .repartition(foldPartitions(spark, statePath), col("hk"))
@@ -1555,16 +1488,8 @@ object Ingest {
     * collapses the segment pile into one, ≙ background delta-merge
     * (`DeltaMergeStore_InternalBg.cpp`). */
   def streamAggMaintain(spark: SparkSession, inputDir: String, statePath: String,
-      autoCompactSegments: Int = SegmentCompactionPolicy.DefaultMaxSegments): Unit = {
-    runAvailableNow(spark, inputDir, s"$statePath-ckpt",
-      prep = df => Tables.normalizeEventsTs(df)) { (batch, id) =>
-      aggPartial(batch).write.mode("overwrite").parquet(seg(statePath, id))
-    }
-    if (pileHasData(spark, statePath) &&
-        SegmentCompactionPolicy.shouldCompact(segmentCount(spark, statePath),
-          autoCompactSegments))
-      compactAggState(spark, statePath)
-  }
+      autoCompactSegments: Int = SegmentCompactionPolicy.DefaultMaxSegments): Unit =
+    ingestPile(spark, Piles.aggMv, (), inputDir, statePath, autoCompactSegments)
 
   /** Fold the partial-state segments into the current MV contents.
     * Identical result to a from-scratch groupBy over the full history;
@@ -1574,16 +1499,9 @@ object Ingest {
       .agg(sum(col("cnt")).as("cnt"), sum(col("vsum")).as("vsum"),
         hll_union_agg(col("users_hll")).as("users_hll"))
 
-  /** Background compaction: rewrite the segment pile as ONE folded
-    * segment. Read-side results are unchanged (fold is associative);
-    * crash safety via [[promoteCompacted]]'s atomic promote. */
-  def compactAggState(spark: SparkSession, statePath: String): Unit = {
-    requireCheckpointCaughtUp(spark, statePath)
-    promoteCompacted(spark, statePath) { tmp =>
-      aggViewOf(spark.read.parquet(statePath))
-        .write.mode("overwrite").parquet(compactedSeg(tmp))
-    }
-  }
+  /** Compact the agg-MV pile: fold to one segment of merged partial states. */
+  def compactAggState(spark: SparkSession, statePath: String): Unit =
+    compactPile(spark, Piles.aggMv, statePath)
 
   /** The compacted generation lives in its own `seg=-1` segment so the
     * pile keeps one consistent partition layout: post-compaction
@@ -1600,8 +1518,8 @@ object Ingest {
     * rename it back or re-promote the committed temp). ≙ the
     * reference's atomic segment replacement in delta-merge
     * (`DeltaMergeStore_InternalBg.cpp`). */
-  private def promoteCompacted(spark: SparkSession, livePath: String)(
-      writeTmp: String => Unit): Unit = {
+  private def promoteCompacted(spark: SparkSession, livePath: String,
+      markers: Seq[(Marker, String)])(writeTmp: String => Unit): Unit = {
     import org.apache.hadoop.fs.Path
     val tmpPath = livePath + ".compact-tmp"
     val live = new Path(livePath)
@@ -1620,6 +1538,10 @@ object Ingest {
       else fs.listStatus(live).map(_.getPath.getName).toSet
     val before = segListing()
     writeTmp(tmpPath)
+    // the markers ride the temp generation, so neither a crash after
+    // the promote nor recoverCompaction's promoted-tmp path can strand
+    // a marker-less pile
+    markers.foreach { case (m, v) => writeMarker(spark, markerPath(tmpPath, m), v) }
     if (segListing() != before) {
       fs.delete(tmp, true)
       throw new java.io.IOException(
@@ -1698,70 +1620,21 @@ object Ingest {
       (bytes / (64L << 20)).toInt))
   }
 
-  /** Compact the ExactSubstr window-hash pile: per-segment partial
-    * counts fold by addition into ONE (hk, c) generation — the state
-    * stops growing with the number of batches and tracks only the
-    * distinct-window cardinality. Read results are unchanged (the
-    * fold is the same sum `dupHashView` performs). The explicit
-    * size-derived repartition on the group keys IS the fold's
-    * exchange (the aggregate's required distribution is satisfied, so
-    * Catalyst adds no second one). */
-  def compactDupSpanState(spark: SparkSession, statePath: String): Unit = {
-    requireCheckpointCaughtUp(spark, statePath)
-    promoteCompacted(spark, statePath) { tmp =>
-      spark.read.parquet(statePath)
-        .repartition(foldPartitions(spark, statePath), col("hk"), col("g"))
-        .groupBy(col("hk"), col("g"))
-        .agg(sum(col("c")).cast("long").as("c"))
-        .write.mode("overwrite").parquet(compactedSeg(tmp))
-      // one row per distinct window now holds — stamp it so the probe's
-      // folded fast path (skip the re-group) can trust the generation
-      // (ADVICE r14 #2: mirror the ptr fold's marker discipline)
-      stampFolded(spark, compactedSeg(tmp))
-    }
-  }
+  /** Compact the ExactSubstr window-hash pile: fold the counts by
+    * addition into one stamped (hk, g, c) generation, which tracks only
+    * the distinct-window cardinality. */
+  def compactDupSpanState(spark: SparkSession, statePath: String): Unit =
+    compactPile(spark, Piles.dupSpan, statePath)
 
-  /** Compact the postings segment pile into one folded generation
-    * (the Lucene forceMerge analog), preserving the term-hash bucket
-    * partitioning a term probe prunes on. The `_buckets` marker is
-    * written INTO the temp generation before the promote renames
-    * (ADVICE r12 #2): the marker rides every promoted generation
-    * atomically, so neither a crash between promote and a post-hoc
-    * marker write nor `recoverCompaction`'s promoted-tmp path can
-    * strand a marker-less pile. */
-  def compactPostings(spark: SparkSession, indexPath: String,
-      buckets: Int = 16): Unit = {
-    val b = readBucketsMarker(spark, indexPath, buckets)
-    requireCheckpointCaughtUp(spark, indexPath)
-    promoteCompacted(spark, indexPath) { tmp =>
-      mergePostingsSegments(
-          spark.read.parquet(indexPath).drop("tbucket", "seg"))
-        .withColumn("tbucket", pmod(abs(hash(col("term"))), lit(b)))
-        .write.mode("overwrite").partitionBy("tbucket").parquet(compactedSeg(tmp))
-      writeBucketsMarker(spark, tmp, b)
-    }
-  }
+  /** Compact the postings pile: fold the per-segment lists (the
+    * Lucene forceMerge analog), keeping the term-bucket partitioning a
+    * probe prunes on. */
+  def compactPostings(spark: SparkSession, indexPath: String): Unit =
+    compactPile(spark, Piles.postings, indexPath)
 
-  /** Compact the LSH banding pile: banding rows are immutable facts
-    * (no fold needed), so compaction rewrites the accumulated
-    * small-file segments as one generation per (band, bucket-hash)
-    * partition — file-count hygiene for a long-running ingest,
-    * read-identical by construction. Both identity markers ride the
-    * temp generation through the atomic promote (ADVICE r12 #2). */
-  def compactLshIndex(spark: SparkSession, indexPath: String,
-      buckets: Int = 16): Unit = {
-    val b = readBucketsMarker(spark, indexPath, buckets)
-    val (nh, bs) = readBandingMarker(spark, indexPath, (16, 4))
-    requireCheckpointCaughtUp(spark, indexPath)
-    promoteCompacted(spark, indexPath) { tmp =>
-      spark.read.parquet(indexPath).drop("seg")
-        .repartition(col("band"), col("bbucket"))
-        .write.mode("overwrite").partitionBy("band", "bbucket")
-        .parquet(compactedSeg(tmp))
-      writeBucketsMarker(spark, tmp, b)
-      writeBandingMarker(spark, tmp, nh, bs)
-    }
-  }
+  /** Compact the LSH banding pile: rewrite, per (band, bbucket) partition. */
+  def compactLshIndex(spark: SparkSession, indexPath: String): Unit =
+    compactPile(spark, Piles.lsh, indexPath)
 
   // ------------------------------------------------------------ queries
   /** MVCC snapshot as a verifiable query (read_ts fixed). */

@@ -20,81 +20,16 @@ import graft.sources.Tables
   * (`/root/reference/dbms/src/Storages/DeltaMerge/Index/VectorIndex/`).
   */
 object IvfPipeline {
-  /** Process-lifetime pile cache, the [[CrawlPipeline]] discipline:
-    * the pile for a given dataset is deterministic (fixed quantizer,
-    * fixed % 3 tick split), so repeated bench/correctness runs in one
-    * JVM reuse it; the workdir dies with the JVM. The input
-    * fingerprint in the key makes a mid-JVM regeneration of the
-    * embeddings table impossible to read stale (the r15 ask #4
-    * discipline), and the split tag guards a future different-split
-    * caller (ADVICE r16 #3). */
-  private val pileCache = scala.collection.mutable.Map[String, String]()
-  private var pileDirSeq = 0
-  private lazy val workRoot: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(dir))
-    }
-    dir
-  }
-
-  private def fingerprint(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/embeddings.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) "absent"
-    else {
-      // recursive walk (the ADVICE r16 #4 discipline): nested part
-      // files fingerprint individually regardless of table layout
-      val it = fs.listFiles(p, true)
-      val parts = scala.collection.mutable.ArrayBuffer[String]()
-      while (it.hasNext) {
-        val st = it.next()
-        parts += s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
-      }
-      java.util.Base64.getEncoder.encodeToString(
-        java.security.MessageDigest.getInstance("SHA-256")
-          .digest(parts.sorted.mkString("\n").getBytes("UTF-8")))
-    }
-  }
-
-  /** Build (or reuse) an IVF pile keyed by `tag` (the split identity —
-    * the ADVICE r16 #3 discipline): `ticks` are ingested as
-    * consecutive REAL micro-batches against the fixed `cent`
-    * quantizer, then the pile is compacted to the promoted single
-    * generation (the steady state the policy keeps a production pile
-    * in). Staging input and the stream checkpoint are deleted after
-    * the build — only the pile and its centroid sibling live until
-    * JVM exit. */
+  /** An IVF pile keyed by `tag` (the split identity): `ticks` are
+    * ingested as consecutive REAL micro-batches against the fixed
+    * `cent` quantizer, then the pile is compacted to the promoted
+    * single generation (the steady state the policy keeps a production
+    * pile in). Built once per input through [[PileCache]]. */
   private def buildPile(s: SparkSession, d: String, tag: String,
-      cent: org.apache.spark.sql.DataFrame,
-      ticks: Seq[org.apache.spark.sql.DataFrame]): String =
-    pileCache.synchronized {
-      pileCache.getOrElseUpdate(s"$d#$tag#${fingerprint(s, d)}", {
-        pileDirSeq += 1
-        val work = s"$workRoot/v$pileDirSeq"
-        val in = s"$work/in"
-        val idx = s"$work/index"
-        var ingested = false
-        for (tick <- ticks if !tick.isEmpty) {
-          tick.write.mode("append").parquet(in)
-          Ingest.streamIvfIngest(s, in, idx, cent)
-          ingested = true
-        }
-        // an all-empty input (empty-table fixture) built nothing — there
-        // is no pile to compact, and the probe of a data-less path is an
-        // empty result by the first-boot contract
-        if (ingested) Ingest.compactIvfIndex(s, idx)
-        val fs = new org.apache.hadoop.fs.Path(work)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        Seq(in, s"$idx-ckpt").foreach(p =>
-          fs.delete(new org.apache.hadoop.fs.Path(p), true))
-        idx
-      })
-    }
+      cent: DataFrame, ticks: Seq[DataFrame]): String =
+    PileCache.build(s, d, "embeddings", tag, ticks)(
+      (in, work) => Ingest.streamIvfIngest(s, in, s"$work/index", cent),
+      work => Ingest.compactIvfIndex(s, s"$work/index")) + "/index"
 
   /** q262's pile: quantizer = q58's deterministic hash-sample
     * centroids over the full table, three vec_id % 3 micro-batch

@@ -23,78 +23,20 @@ import graft.sources.Tables
   * (`Storages/DeltaMerge/Index/VectorIndex/`).
   */
 object PileProbes {
-  /** Process-lifetime pile cache — the [[IvfPipeline]] discipline:
-    * deterministic pile per (dataset, table, split tag), input
-    * fingerprint in the key so a mid-JVM regeneration of the source
-    * table can never be read stale, workdir dies with the JVM. */
-  private val pileCache = scala.collection.mutable.Map[String, String]()
-  private var pileDirSeq = 0
-  private lazy val workRoot: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pileprobes").toString
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(dir))
-    }
-    dir
-  }
-
-  private def fingerprint(s: SparkSession, d: String, table: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/$table.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) "absent"
-    else {
-      val it = fs.listFiles(p, true)
-      val parts = scala.collection.mutable.ArrayBuffer[String]()
-      while (it.hasNext) {
-        val st = it.next()
-        parts += s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
-      }
-      java.util.Base64.getEncoder.encodeToString(
-        java.security.MessageDigest.getInstance("SHA-256")
-          .digest(parts.sorted.mkString("\n").getBytes("UTF-8")))
-    }
-  }
-
-  /** Build (or reuse) a pile: `ticks` are staged and ingested as
-    * consecutive REAL micro-batches by `ingest`, then `finish` runs
-    * (compaction — or, for q266, the quantizer rotation) while the
-    * stream checkpoint still exists. Staging input and checkpoint are
-    * deleted after the build; only the pile (and any identity
-    * siblings) live until JVM exit. An all-empty input builds nothing
-    * — probing a data-less path is an empty result by the first-boot
-    * contract. */
+  /** A pile over `table`: `ticks` are ingested as consecutive REAL
+    * micro-batches by `ingest(in, pile)`, then `finish(pile)` runs
+    * (compaction — or, for q266, the quantizer rotation). Built once
+    * per input through [[PileCache]]. */
   private def buildPile(s: SparkSession, d: String, table: String,
       tag: String, ticks: Seq[DataFrame],
       ingest: (String, String) => Unit,
       finish: String => Unit): String =
-    pileCache.synchronized {
-      pileCache.getOrElseUpdate(s"$d#$table#$tag#${fingerprint(s, d, table)}", {
-        pileDirSeq += 1
-        val work = s"$workRoot/v$pileDirSeq"
-        val in = s"$work/in"
-        val pile = s"$work/pile"
-        var ingested = false
-        for (tick <- ticks if !tick.isEmpty) {
-          tick.write.mode("append").parquet(in)
-          ingest(in, pile)
-          ingested = true
-        }
-        if (ingested) finish(pile)
-        val fs = new org.apache.hadoop.fs.Path(work)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        Seq(in, s"$pile-ckpt").foreach(p =>
-          fs.delete(new org.apache.hadoop.fs.Path(p), true))
-        pile
-      })
-    }
+    PileCache.build(s, d, table, tag, ticks)(
+      (in, work) => ingest(in, s"$work/pile"), work => finish(s"$work/pile")) + "/pile"
 
   // ---------------------------------------------------- q264: postings
 
   private val probeTerms = Seq("hash", "join")
-  private val PostingsBuckets = 16
 
   /** Postings pile over the documents table: three doc_id % 3
     * micro-batch ticks through the REAL [[Ingest.streamPostingsIngest]]
@@ -103,8 +45,8 @@ object PileProbes {
     val docs = Tables.documents(s, d)
     buildPile(s, d, "documents", "post#mod3",
       (0 until 3).map(m => docs.filter(pmod(col("doc_id"), lit(3)) === m)),
-      (in, pile) => Ingest.streamPostingsIngest(s, in, pile, PostingsBuckets),
-      pile => Ingest.compactPostings(s, pile, PostingsBuckets))
+      (in, pile) => Ingest.streamPostingsIngest(s, in, pile),
+      pile => Ingest.compactPostings(s, pile))
   }
 
   /** q264: q75's CONTAINS-all answer served from the maintained
@@ -122,12 +64,13 @@ object PileProbes {
       s.range(0).select(col("id").as("doc_id"), col("id").as("n_terms"))
     else {
       // the probed terms' bucket ids, computed by the pile's OWN
-      // term→bucket rule — a |terms|-row driver-side evaluation (2
-      // rows here) so the bucket literals reach the scan as partition
-      // filters (the lshProbe touched-partition discipline)
+      // term→bucket rule and modulus (its marker) — a |terms|-row
+      // driver-side evaluation (2 rows here) so the bucket literals
+      // reach the scan as partition filters (the lshProbe
+      // touched-partition discipline)
       import s.implicits._
       val tb = probeTerms.toDF("term")
-        .select(pmod(abs(hash(col("term"))), lit(PostingsBuckets)).cast("int"))
+        .select(pmod(abs(hash(col("term"))), lit(Ingest.bucketsOf(s, pile))).cast("int"))
         .collect().map(_.getInt(0)).distinct.toSeq
       val pruned = s.read.parquet(pile)
         .filter(col("tbucket").isin(tb: _*) &&
@@ -145,25 +88,20 @@ object PileProbes {
 
   // ------------------------------------------------- q267: BM25 piles
 
-  /** q267's piles: tf-postings + doc-stats over the documents table,
-    * three doc_id % 3 micro-batch ticks through the REAL maintenance,
-    * both compacted. The two piles live under one workdir; their
-    * inner checkpoints die with the build. */
+  /** q267's piles: tf-postings (`<work>/tf`) + doc-stats
+    * (`<work>/stats`) over the documents table, three doc_id % 3
+    * micro-batch ticks through the REAL maintenance, both compacted. */
   private def bm25PilesFor(s: SparkSession, d: String): String = {
     val docs = Tables.documents(s, d)
-    buildPile(s, d, "documents", "bm25#mod3",
-      (0 until 3).map(m => docs.filter(pmod(col("doc_id"), lit(3)) === m)),
-      (in, pile) => {
-        Ingest.streamTfPostingsIngest(s, in, s"$pile/tf")
-        Ingest.streamDocStatsIngest(s, in, s"$pile/stats")
+    PileCache.build(s, d, "documents", "bm25#mod3",
+      (0 until 3).map(m => docs.filter(pmod(col("doc_id"), lit(3)) === m)))(
+      (in, work) => {
+        Ingest.streamTfPostingsIngest(s, in, s"$work/tf")
+        Ingest.streamDocStatsIngest(s, in, s"$work/stats")
       },
-      pile => {
-        Ingest.compactTfPostings(s, s"$pile/tf")
-        Ingest.compactDocStats(s, s"$pile/stats")
-        val fs = new org.apache.hadoop.fs.Path(pile)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        Seq(s"$pile/tf-ckpt", s"$pile/stats-ckpt").foreach(p =>
-          fs.delete(new org.apache.hadoop.fs.Path(p), true))
+      work => {
+        Ingest.compactTfPostings(s, s"$work/tf")
+        Ingest.compactDocStats(s, s"$work/stats")
       })
   }
 
@@ -320,9 +258,8 @@ object PileProbes {
     * stream. count and the exact-decimal value sum are
     * order-insensitive mergeable states, so the folded MV must equal
     * the rebuild bit-for-bit (the HLL distinct-user state stays
-    * contract-land: its fold estimates via a different estimator than
-    * a direct build — see SoakProof — so it is asserted with tolerance
-    * there, never hashed here). */
+    * contract-land: `StreamingSpec` and `SoakSpec` check its estimate;
+    * it is never hashed here). */
   val q265AggMvStream: QueryDef = QueryDef(
     "q265_agg_mv_stream",
     """SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,

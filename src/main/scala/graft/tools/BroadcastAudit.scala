@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import scala.util.control.NonFatal
 
 /** Broadcast-at-scale audit (the q215 bug class, round 11).
   *
@@ -167,7 +168,7 @@ object BroadcastAudit {
             s""""broadcasts":${bs.size},"flagged":[${flags.mkString(",")}]}""")
         }
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           println(s"""{"query":"${q.name}","error":"${e.getClass.getName}"}""")
           System.err.println(s"[audit] ${q.name}: $e")
       }

@@ -2,6 +2,7 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import scala.util.control.NonFatal
 
 /** Spill-path proof (round-9 VERDICT ask #4): run a query subset under
   * a constrained heap (the harness passes `-Xmx2g` via run/javaOptions)
@@ -83,7 +84,7 @@ object SpillProof {
             .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
           true
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"[spill] $name FAILED: $e"); false
         }
       val sec = (System.nanoTime() - t0) / 1e9

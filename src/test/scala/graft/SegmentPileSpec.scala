@@ -1,0 +1,143 @@
+package graft
+
+import java.nio.file.Files
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import graft.streaming.Ingest
+import graft.sources.Tables
+import graft.operators.Similarity
+
+/** The on-disk contract every segment-pile family shares, pinned
+  * family by family through the public ingest and compaction entry
+  * points: two real micro-batches, then a compaction, must leave a
+  * read view equal to the two-segment one, and a root holding exactly
+  * the promoted `seg=-1` generation plus the family's identity markers
+  * with their exact contents. A crash between the promote's two
+  * renames must recover with every marker intact. */
+class SegmentPileSpec extends SparkTestBase {
+
+  /** One pile family: its source rows, how to ingest a micro-batch and
+    * compact, its read view (sorted rows as text, so a multiset
+    * compares exactly), the markers its root must carry, and whether
+    * its compacted generation is stamped `_folded`. */
+  private case class Family(
+      name: String,
+      source: () => DataFrame,
+      key: String,
+      ingest: (String, String) => Unit,
+      compact: String => Unit,
+      view: String => Seq[String],
+      markers: () => Map[String, String] = () => Map.empty,
+      folded: Boolean = false)
+
+  private def docs = Tables.documents(spark, sf).orderBy(col("doc_id")).limit(200)
+  private def events = Tables.events(spark, sf01)
+  private def embeddings = Tables.embeddings(spark, sf01)
+  private lazy val cent = Similarity.ivfCentroids(embeddings)
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map {
+      case s: scala.collection.Seq[_] => s.mkString("[", ",", "]")
+      case v => String.valueOf(v)
+    }.mkString("|")).toSeq.sorted
+  private def pile(p: String) = spark.read.parquet(p)
+
+  private val families = Seq(
+    Family("ivf", () => embeddings, "vec_id",
+      (in, p) => Ingest.streamIvfIngest(spark, in, p, cent),
+      p => Ingest.compactIvfIndex(spark, p),
+      p => rows(pile(p).select(col("vec_id"), col("cid").cast("long"))),
+      () => Map("_centroids" -> Ingest.centroidFingerprint(cent))),
+    Family("postings", () => docs, "doc_id",
+      (in, p) => Ingest.streamPostingsIngest(spark, in, p, buckets = 8),
+      p => Ingest.compactPostings(spark, p),
+      p => rows(Ingest.mergePostingsSegments(pile(p).drop("tbucket", "seg"))),
+      () => Map("_buckets" -> "8")),
+    Family("tf-postings", () => docs, "doc_id",
+      (in, p) => Ingest.streamTfPostingsIngest(spark, in, p),
+      p => Ingest.compactTfPostings(spark, p),
+      p => rows(pile(p).select(col("term"), col("doc_id"), col("tf"), col("dl"))),
+      () => Map("_buckets" -> "16")),
+    Family("doc-stats", () => docs, "doc_id",
+      (in, p) => Ingest.streamDocStatsIngest(spark, in, p),
+      p => Ingest.compactDocStats(spark, p),
+      p => rows(Ingest.docStatsView(pile(p)))),
+    Family("pos-postings", () => docs, "doc_id",
+      (in, p) => Ingest.streamPosPostingsIngest(spark, in, p, buckets = 4),
+      p => Ingest.compactPosPostings(spark, p),
+      p => rows(pile(p).select(col("term"), col("doc_id"), col("pos"))),
+      () => Map("_buckets" -> "4")),
+    Family("lsh", () => docs, "doc_id",
+      (in, p) => Ingest.streamLshIngest(spark, in, p, buckets = 8,
+        numHashes = 32, bandSize = 2),
+      p => Ingest.compactLshIndex(spark, p),
+      p => rows(pile(p).select(col("doc_id"), col("band"), col("bucket"))),
+      () => Map("_buckets" -> "8", "_banding" -> "32 2")),
+    Family("shingles", () => docs, "doc_id",
+      (in, p) => Ingest.streamShingleIngest(spark, in, p),
+      p => Ingest.compactShinglePile(spark, p),
+      p => rows(pile(p).select(col("doc_id"), sort_array(col("sh")))),
+      () => Map("_buckets" -> "16")),
+    Family("dup-span", () => docs, "doc_id",
+      (in, p) => Ingest.streamDupSpanMaintain(spark, in, p),
+      p => Ingest.compactDupSpanState(spark, p),
+      p => rows(Ingest.dupHashView(pile(p))),
+      folded = true),
+    Family("dup-span-ptr", () => docs, "doc_id",
+      (in, p) => Ingest.streamDupSpanMaintainPtr(spark, in, p),
+      p => Ingest.compactDupSpanStatePtr(spark, p),
+      p => rows(pile(p).select(col("hk"), col("o_doc"), col("o_i"), col("c")))),
+    Family("agg-mv", () => events, "event_id",
+      (in, p) => Ingest.streamAggMaintain(spark, in, p),
+      p => Ingest.compactAggState(spark, p),
+      p => rows(Ingest.aggViewOf(pile(p)).select(col("event_type"), col("day"),
+        col("cnt"), col("vsum"), hll_sketch_estimate(col("users_hll")))))
+  )
+
+  families.foreach { f =>
+    test(s"${f.name}: two ticks then compaction keep the read view, the layout and the markers") {
+      val base = Files.createTempDirectory(s"graft-pile-${f.name}").toString
+      val in = s"$base/in"
+      val p = s"$base/pile"
+      val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def children(dir: String): Set[String] =
+        fs.listStatus(new Path(dir)).map(_.getPath.getName)
+          .filterNot(_.startsWith(".")).toSet // checksum sidecars
+      def read(file: String): String = {
+        val s = fs.open(new Path(file))
+        try scala.io.Source.fromInputStream(s, "UTF-8").mkString finally s.close()
+      }
+      val src = f.source()
+      for (m <- 0 until 2) {
+        src.filter(pmod(col(f.key), lit(2)) === m).write.mode("append").parquet(in)
+        f.ingest(in, p)
+      }
+      val markers = f.markers()
+      assert(children(p) === Set("seg=0", "seg=1") ++ markers.keySet)
+      val before = f.view(p)
+      assert(before.nonEmpty, "the fixture must put rows in the pile")
+
+      f.compact(p)
+      assert(f.view(p) === before, "compaction must not change the read view")
+      assert(children(p) === Set("seg=-1") ++ markers.keySet)
+      markers.foreach { case (name, value) =>
+        assert(read(s"$p/$name") === value, s"$name content")
+      }
+      assert(fs.exists(new Path(s"$p/seg=-1/_folded")) === f.folded,
+        "only the dup-span text fold stamps its generation")
+
+      // crash between the promote's renames: the live pile parked at
+      // .compact-old, the compacted generation durable at .compact-tmp
+      assert(fs.rename(new Path(p), new Path(s"$p.compact-tmp")))
+      fs.mkdirs(new Path(s"$p.compact-old/seg=0"))
+      assert(Ingest.recoverCompaction(spark, p) === "promoted-tmp")
+      assert(!fs.exists(new Path(s"$p.compact-old")))
+      assert(children(p) === Set("seg=-1") ++ markers.keySet)
+      markers.foreach { case (name, value) =>
+        assert(read(s"$p/$name") === value, s"$name content after recovery")
+      }
+      assert(f.view(p) === before, "recovery must not change the read view")
+    }
+  }
+}

@@ -107,10 +107,9 @@ class SoakSpec extends SparkTestBase {
         .filter(col("c") >= 2).select(col("hk"), col("g"))
         .collect().map(r => s"${r.getLong(0)}|${r.getString(1)}").toSet)
 
-    // The IVF pile (r17, the 7th incremental surface — SoakProof runs
-    // all seven at 10×; here the composed test-scale choreography adds
-    // it to the crash-injection rotation): assignment rows against the
-    // FIXED quantizer are immutable facts, so the view is the rows
+    // The IVF pile (r17, the 7th incremental surface, in the
+    // crash-injection rotation): assignment rows against the FIXED
+    // quantizer are immutable facts, so the view is the rows
     // themselves (cid partition values read back as ints — cast long).
     val inEmb = base.toString + "/in-emb"
     val emb = Tables.embeddings(spark, sf)

@@ -1564,27 +1564,66 @@ class StreamingSpec extends SparkTestBase {
     // sfDir STRING — a dataset regenerated at the same path mid-JVM
     // (e.g. a ScaleUp re-run onto its previous /tmp target) would
     // silently serve piles built from the old bytes. The key now
-    // carries an input fingerprint (documents file listing), so this
-    // end-to-end re-run must gate the REGENERATED batch, not v1's.
+    // carries the source table's file signature, so every end-to-end
+    // re-run below must answer from the REGENERATED table, not v1's.
+    // One case per pile builder over the shared cache: the crawl
+    // capstone (q258, documents), the agg-MV probe (q265, events) and
+    // the IVF pipeline (q262, embeddings).
     import spark.implicits._
     val d = Files.createTempDirectory("graft-regen-input").toString
-    val corpusText = (1 to 60).map(i => s"stable$i").mkString(" ")
-    def gen(batchIds: Seq[Long]): Unit =
-      ((1L to 5L).map(i => (i * 10, s"corpus $i $corpusText")) ++
-        batchIds.map(i => (i, s"batch $i $corpusText")))
+    def words(w: String) = (1 to 60).map(i => s"$w$i").mkString(" ")
+    // the batch repeats the corpus text in v1 only, so near_dup of the
+    // first batch doc depends on which corpus the piles hold
+    def genDocs(corpusWord: String, batchIds: Seq[Long]): Unit =
+      ((1L to 5L).map(i => (i * 10, s"corpus $i ${words(corpusWord)}")) ++
+        batchIds.map(i => (i, s"batch $i ${words("stable")}")))
         .toDF("doc_id", "text")
         .write.mode("overwrite").parquet(s"$d/documents.parquet")
-    gen(Seq(8L, 18L))
-    val v1 = graft.streaming.CrawlPipeline.q258CrawlCapstone.fn(spark, d)
-    val ids1 = v1.select("doc_id").as[Long].collect().toSet
-    v1.unpersist(blocking = true)
-    assert(ids1 === Set(8L, 18L))
-    gen(Seq(9L, 28L, 38L)) // regenerate IN-JVM at the same path
-    val v2 = graft.streaming.CrawlPipeline.q258CrawlCapstone.fn(spark, d)
-    val ids2 = v2.select("doc_id").as[Long].collect().toSet
-    v2.unpersist(blocking = true)
-    assert(ids2 === Set(9L, 28L, 38L),
-      "the gate must see the regenerated batch — a v1 id set means a stale pile was read")
+    def genEvents(kinds: Seq[String]): Unit =
+      kinds.zipWithIndex.map { case (k, i) =>
+        (i.toLong, java.sql.Timestamp.valueOf("2024-01-02 03:04:05"), i.toLong % 2, k, 1.5)
+      }.toDF("event_id", "ts", "user_id", "event_type", "value")
+        .write.mode("overwrite").parquet(s"$d/events.parquet")
+    // queries 0..4 each get a near twin `twin + i`: the probe must
+    // return the CURRENT table's twins
+    def genEmbeddings(twin: Long): Unit =
+      (0L until 5L).flatMap { i =>
+        val v = Array(i + 1f, (i * 3 % 5) + 1f, (i * 7 % 5) + 1f, 1f)
+        Seq((i, v), (twin + i, v.updated(0, v(0) + 0.01f)))
+      }.toDF("vec_id", "embedding")
+        .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+    def values(c: org.apache.spark.sql.Column)(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.select(c.cast("string")).as[String].collect().toSet
+    // (query, its answer's values, generate version v, values at v)
+    val cases = Seq[(QueryDef, org.apache.spark.sql.DataFrame => Set[String],
+        Int => Unit, Int => Set[String])](
+      (graft.streaming.CrawlPipeline.q258CrawlCapstone,
+        values(concat_ws(":", col("doc_id"), col("near_dup"))),
+        v => if (v == 1) genDocs("stable", Seq(8L, 18L))
+          else genDocs("other", Seq(9L, 28L, 38L)),
+        v => if (v == 1) Set("8:1", "18:1") else Set("9:0", "28:1", "38:1")),
+      (graft.streaming.PileProbes.q265AggMvStream, values(col("event_type")),
+        v => genEvents(if (v == 1) Seq("click", "click") else Seq("view", "buy", "view")),
+        v => if (v == 1) Set("click") else Set("view", "buy")),
+      // every neighbour outside the queries is a twin, and each query
+      // finds its own
+      (graft.streaming.IvfPipeline.q262AnnIvfStream,
+        df => values(col("vec_id"))(df.filter(col("vec_id") >= 5)),
+        v => genEmbeddings(if (v == 1) 5L else 100L),
+        v => (0L until 5L).map(i => (i + (if (v == 1) 5L else 100L)).toString).toSet))
+    for ((q, answer, gen, want) <- cases) {
+      def run(): Set[String] = {
+        val got = answer(q.fn(spark, d))
+        CacheHygiene.sweep(spark, q.name)
+        got
+      }
+      gen(1)
+      assert(run() === want(1), s"${q.name} v1")
+      gen(2) // regenerate IN-JVM at the same path
+      assert(run() === want(2),
+        s"${q.name}: the answer must come from the regenerated table — " +
+          "v1 values mean a stale pile was read")
+    }
   }
 
   test("refuseDegenerate fires for a touched over-cap bucket even when no probe row matches its bucket value") {
