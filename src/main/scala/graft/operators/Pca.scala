@@ -169,8 +169,8 @@ object Pca {
     // action — an eager unpersist here would make the timed action
     // re-derive centeredGrid (quantize → posexplode mean → broadcast
     // crossJoin) from scratch, one extra corpus pass that round 10
-    // measured as the q202 bench breach. The harness (Bench/Verify/
-    // SpillProof) sweeps it via CacheHygiene after consuming output.
+    // measured as the q202 bench breach. The harness (Bench, Verify)
+    // sweeps it via CacheHygiene after consuming output.
     val cen = centeredGrid(e).cache()
     val v = powerIteration(cen, iters = 3)
     cen.select(col("vec_id"), proj(col("c"), v).as("proj6"))

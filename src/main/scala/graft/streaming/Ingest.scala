@@ -3,8 +3,10 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.streaming.Trigger
 import graft.QueryDef
+import graft.functions.BoundLong
 import graft.sources.Tables
 
 /** Continuous ingest + MVCC snapshot reads — the Spark mapping of the
@@ -34,11 +36,14 @@ object Ingest {
 
   /** MVCC snapshot at `readTs`: newest surviving version per pk.
     * ≙ DMVersionFilter MVCC mode (COMPACT). The window partitions on
-    * the pk — high-cardinality, so this scales as a hash shuffle. */
+    * the pk — high-cardinality, so this scales as a hash shuffle.
+    * `readTs` is bound as a value, not a literal: every committed tick
+    * gives readers a new version, and a literal would make each one a
+    * new generated class. */
   def snapshot(versionedDf: DataFrame, readTs: Long): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("version").desc)
     versionedDf
-      .filter(col("version") <= readTs)
+      .filter(col("version") <= ColumnBridge.column(BoundLong(readTs)))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1 && !col("delmark"))
       .drop("rn")

@@ -42,6 +42,40 @@ class MvccSpec extends SparkTestBase {
     assert(Ingest.compact(empty).count() === 0L)
   }
 
+  /** The snapshot as it was when the read version was a literal in the
+    * filter: the reference for `Ingest.snapshot`'s bound version. */
+  private def literalSnapshot(df: org.apache.spark.sql.DataFrame, readTs: Long) = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{lit, row_number}
+    df.filter($"version" <= lit(readTs))
+      .withColumn("rn", row_number().over(Window.partitionBy($"user_id").orderBy($"version".desc)))
+      .filter($"rn" === 1 && !$"delmark")
+      .drop("rn")
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("the bound read version equals the literal-filter window at every version") {
+    // a two-segment pile: versions 1-3 in seg=0, 5-7 in seg=1
+    val pile = java.nio.file.Files.createTempDirectory("graft-mvcc-bound").resolve("log").toString
+    changelog.filter($"version" <= 3).write.parquet(s"$pile/seg=0")
+    changelog.filter($"version" > 3).write.parquet(s"$pile/seg=1")
+    val segs = spark.read.parquet(pile)
+    val below = Seq(Long.MinValue, 0L)
+    val between = Seq(3L, 4L) // the last of seg=0, and a version no segment holds
+    val atAndAbove = Seq(7L, 8L, Long.MaxValue)
+    for (v <- below ++ between ++ atAndAbove) {
+      val got = rows(Ingest.snapshot(segs, v))
+      assert(got === rows(literalSnapshot(segs, v)), s"read at version $v")
+      assert(got.isEmpty === below.contains(v), s"read at version $v: $got")
+    }
+    assert(rows(Ingest.compact(segs)) === rows(literalSnapshot(segs, 7L)))
+    val empty = segs.filter($"version" < 0)
+    assert(Ingest.compact(empty).schema === literalSnapshot(empty, Long.MinValue).schema)
+    assert(rows(Ingest.compact(empty)).isEmpty)
+  }
+
   test("compaction policy mirrors the reference GC triggers") {
     import Ingest.CompactionPolicy._
     // ratio < 1 → always compact (DeltaMergeStore_InternalBg.cpp:579-580)
