@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.unsafe.array.ByteArrayMethods
 
 /** Canonical session config for the engine.
   *
@@ -16,11 +17,53 @@ import org.apache.spark.sql.SparkSession
   * class loader (artifact isolation off; safe because nothing adds
   * session artifacts), so a repeated query, tick or snapshot read
   * compiles no new class.
+  *
+  * Execution memory grows with the rows an operator holds, not with the
+  * core count. Spark hands every sort, hash aggregate and hash-join build
+  * whole Tungsten pages, and by default sizes a page from the execution
+  * pool divided by the core count and a safety factor of 16: 64 MiB on an
+  * 8 GiB heap at `local[4]`, taken as soon as the operator sees its first
+  * row, however few rows follow. `builder` sets `spark.buffer.pageSize`
+  * to [[pageSizeFor]] the heap of the JVM that runs the tasks instead: the
+  * smallest power of two of at least 1 MiB, capped at Spark's 64 MiB, such
+  * that the 8192 pages of a task's page table cover the heap (1 MiB at
+  * `-Xmx8g`). Why that is enough:
+  *  - one task can still address the whole heap before its page table
+  *    fills, so under pressure it spills instead of failing;
+  *  - a record larger than a page gets a page of its own size, as before;
+  *  - a page stays below G1's humongous threshold (half a region) on
+  *    heaps above 4 GiB and up to 64 GiB: G1 rounds regions up to a power
+  *    of two near heap/2048, so a region is four pages there. Spark's
+  *    64 MiB pages were humongous at every heap size (regions are at
+  *    most 32 MiB).
+  * For `local[...]` the task JVM is this one (`Runtime.maxMemory`). With a
+  * non-local master, set `spark.buffer.pageSize` to
+  * `pageSizeFor(<spark.executor.memory in bytes>)` on the builder.
+  *
+  * Like `spark.sql.codegen.cache.maxEntries` (sized when `CodeGenerator`
+  * is first used), the page size is read only once, when the SparkContext
+  * starts. So every entry point builds its session through `builder`
+  * before anything else touches Spark: a session or a generated class
+  * created earlier silently keeps Spark's defaults.
   */
 object GraftSession {
+  /** Entries in a task's page table (`TaskMemoryManager.PAGE_TABLE_SIZE`). */
+  private val PageTableSize = 8192L
+  private val MinPageBytes = 1L << 20
+  private val MaxPageBytes = 64L << 20
+
+  /** Tungsten page size for tasks running in a JVM of `maxHeapBytes`: the
+    * smallest power of two in [1 MiB, 64 MiB] whose page table covers the
+    * heap, or 64 MiB when none does. */
+  def pageSizeFor(maxHeapBytes: Long): Long = {
+    val cover = ByteArrayMethods.nextPowerOf2((maxHeapBytes - 1) / PageTableSize + 1)
+    math.min(MaxPageBytes, math.max(MinPageBytes, cover))
+  }
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
+      .config("spark.buffer.pageSize", pageSizeFor(Runtime.getRuntime.maxMemory).toString)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       // custom Catalyst expressions (vector distances, sip_hash64,
@@ -54,6 +97,12 @@ object GraftSession {
       // tick (AvailableNow + awaitTermination) that callers rely on to
       // see a committed result when the call returns.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // Generated class names carry no codegen stage id. AQE numbers
+      // whole-stage codegen stages in the order it plans query stages,
+      // which follows which shuffle finishes first, so with ids in the
+      // names a query whose stages race (q197, q201, q209, q218, q258,
+      // q259) produced new source text, and recompiled, on every run.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       // This box stalls under host CPU-credit throttling (documented in
       // docs/BENCH_NOTES.md): a multi-second freeze can miss enough
       // executor→driver heartbeats that local-mode Spark kills the JVM
