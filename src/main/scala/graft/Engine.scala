@@ -23,11 +23,9 @@ object Engine {
   /** Register catalog views + custom functions on an existing session. */
   def attach(spark: SparkSession, dataDir: String): SparkSession = {
     operators.Relational.views(spark, dataDir)
-    functions.VectorFunctions.register(spark)
-    functions.SipHash.register(spark)
-    functions.JsonFunctions.register(spark)
-    functions.MySqlJsonFunctions.register(spark)
-    functions.MySqlRegexpFunctions.register(spark)
+    GraftExtensions.functions.foreach { case (id, info, build) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, build)
+    }
     spark
   }
 }

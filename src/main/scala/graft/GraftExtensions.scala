@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions._
 
@@ -16,57 +17,43 @@ import graft.functions._
   *   .config("spark.sql.extensions", "graft.GraftExtensions")
   *   .getOrCreate()
   * }}}
-  * (or `VectorFunctions.register(spark)` on an existing session).
+  * (or [[Engine.attach]] on an existing session).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  private def info(name: String): ExpressionInfo =
-    new ExpressionInfo(classOf[VecCosineDistance].getName, name)
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(e.injectFunction)
+}
 
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("vec_l1_distance"), info("vec_l1_distance"),
-      (es: Seq[Expression]) => VecL1Distance(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("vec_l2_distance"), info("vec_l2_distance"),
-      (es: Seq[Expression]) => VecL2Distance(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("vec_negative_inner_product"),
-      info("vec_negative_inner_product"),
-      (es: Seq[Expression]) => VecNegativeInnerProduct(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("vec_cosine_distance"), info("vec_cosine_distance"),
-      (es: Seq[Expression]) => VecCosineDistance(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("vec_l2_norm"), info("vec_l2_norm"),
-      (es: Seq[Expression]) => VecL2Norm(es.head)))
-    e.injectFunction((FunctionIdentifier("json_depth"), info("json_depth"),
-      (es: Seq[Expression]) => JsonDepth(es.head)))
-    e.injectFunction((FunctionIdentifier("mysql_json_extract"), info("mysql_json_extract"),
-      (es: Seq[Expression]) => MySqlJsonExtract(es)))
-    e.injectFunction((FunctionIdentifier("mysql_json_unquote"), info("mysql_json_unquote"),
-      (es: Seq[Expression]) => MySqlJsonUnquote(es.head)))
-    e.injectFunction((FunctionIdentifier("mysql_json_keys"), info("mysql_json_keys"),
-      (es: Seq[Expression]) => MySqlJsonKeys(es)))
-    e.injectFunction((FunctionIdentifier("mysql_json_length"), info("mysql_json_length"),
-      (es: Seq[Expression]) => MySqlJsonLength(es)))
-    e.injectFunction((FunctionIdentifier("mysql_json_valid"), info("mysql_json_valid"),
-      (es: Seq[Expression]) => MySqlJsonValid(es.head)))
-    e.injectFunction((FunctionIdentifier("mysql_json_contains_path"),
-      info("mysql_json_contains_path"),
-      (es: Seq[Expression]) => MySqlJsonContainsPath(es)))
-    e.injectFunction((FunctionIdentifier("mysql_json_array"), info("mysql_json_array"),
-      (es: Seq[Expression]) => MySqlJsonArray(es)))
-    e.injectFunction((FunctionIdentifier("mysql_json_object"), info("mysql_json_object"),
-      (es: Seq[Expression]) => MySqlJsonObject(es)))
-    e.injectFunction((FunctionIdentifier("mysql_json_quote"), info("mysql_json_quote"),
-      (es: Seq[Expression]) => MySqlJsonQuote(es.head)))
-    e.injectFunction((FunctionIdentifier("mysql_cast_string_as_json"),
-      info("mysql_cast_string_as_json"),
-      (es: Seq[Expression]) => MySqlCastStringAsJson(es.head)))
-    e.injectFunction((FunctionIdentifier("mysql_regexp_instr"), info("mysql_regexp_instr"),
-      (es: Seq[Expression]) => MySqlRegexpInstr(es)))
-    e.injectFunction((FunctionIdentifier("mysql_regexp_substr"), info("mysql_regexp_substr"),
-      (es: Seq[Expression]) => MySqlRegexpSubstr(es)))
-    e.injectFunction((FunctionIdentifier("mysql_regexp_replace"), info("mysql_regexp_replace"),
-      (es: Seq[Expression]) => MySqlRegexpReplace(es)))
-    e.injectFunction((FunctionIdentifier("sip_hash64"), info("sip_hash64"),
-      (es: Seq[Expression]) => SipHash64Expr(es.head)))
-    e.injectFunction((FunctionIdentifier("nfc_normalize"), info("nfc_normalize"),
-      (es: Seq[Expression]) => NfcNormalize(es.head)))
-  }
+object GraftExtensions {
+  private def fn(name: String, cls: Class[_ <: Expression], build: FunctionBuilder) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
+  /** The engine's SQL functions, one entry each: the extension injects
+    * this table and [[Engine.attach]] installs it on a live session. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    fn("vec_l1_distance", classOf[VecL1Distance], es => VecL1Distance(es(0), es(1))),
+    fn("vec_l2_distance", classOf[VecL2Distance], es => VecL2Distance(es(0), es(1))),
+    fn("vec_negative_inner_product", classOf[VecNegativeInnerProduct],
+      es => VecNegativeInnerProduct(es(0), es(1))),
+    fn("vec_cosine_distance", classOf[VecCosineDistance],
+      es => VecCosineDistance(es(0), es(1))),
+    fn("vec_l2_norm", classOf[VecL2Norm], es => VecL2Norm(es.head)),
+    fn("json_depth", classOf[JsonDepth], es => JsonDepth(es.head)),
+    fn("mysql_json_extract", classOf[MySqlJsonExtract], es => MySqlJsonExtract(es)),
+    fn("mysql_json_unquote", classOf[MySqlJsonUnquote], es => MySqlJsonUnquote(es.head)),
+    fn("mysql_json_keys", classOf[MySqlJsonKeys], es => MySqlJsonKeys(es)),
+    fn("mysql_json_length", classOf[MySqlJsonLength], es => MySqlJsonLength(es)),
+    fn("mysql_json_valid", classOf[MySqlJsonValid], es => MySqlJsonValid(es.head)),
+    fn("mysql_json_contains_path", classOf[MySqlJsonContainsPath],
+      es => MySqlJsonContainsPath(es)),
+    fn("mysql_json_array", classOf[MySqlJsonArray], es => MySqlJsonArray(es)),
+    fn("mysql_json_object", classOf[MySqlJsonObject], es => MySqlJsonObject(es)),
+    fn("mysql_json_quote", classOf[MySqlJsonQuote], es => MySqlJsonQuote(es.head)),
+    fn("mysql_cast_string_as_json", classOf[MySqlCastStringAsJson],
+      es => MySqlCastStringAsJson(es.head)),
+    fn("mysql_regexp_instr", classOf[MySqlRegexpInstr], es => MySqlRegexpInstr(es)),
+    fn("mysql_regexp_substr", classOf[MySqlRegexpSubstr], es => MySqlRegexpSubstr(es)),
+    fn("mysql_regexp_replace", classOf[MySqlRegexpReplace], es => MySqlRegexpReplace(es)),
+    fn("sip_hash64", classOf[SipHash64Expr], es => SipHash64Expr(es.head)),
+    fn("nfc_normalize", classOf[NfcNormalize], es => NfcNormalize(es.head)))
 }

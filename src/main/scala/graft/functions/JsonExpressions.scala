@@ -72,12 +72,8 @@ case class JsonDepth(child: Expression)
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
-/** Column facade + SQL registration for the JSON expressions. */
+/** Column facade for the JSON expressions. */
 object JsonFunctions {
   def json_depth(c: Column): Column =
     ColumnBridge.column(JsonDepth(ColumnBridge.expression(c)))
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "json_depth", es => JsonDepth(es.head), "built-in")
 }

@@ -555,18 +555,4 @@ object MySqlJsonFunctions {
   def cast_string_as_json(c: Column): Column = col(MySqlCastStringAsJson(ex(c)))
   /** CAST(json AS CHAR(n)) — rendered text, char-truncated. */
   def cast_json_as_char(c: Column, n: Int): Column = substring(c, 1, n)
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction("mysql_json_extract", es => MySqlJsonExtract(es), "built-in")
-    r.createOrReplaceTempFunction("mysql_json_unquote", es => MySqlJsonUnquote(es.head), "built-in")
-    r.createOrReplaceTempFunction("mysql_json_keys", es => MySqlJsonKeys(es), "built-in")
-    r.createOrReplaceTempFunction("mysql_json_length", es => MySqlJsonLength(es), "built-in")
-    r.createOrReplaceTempFunction("mysql_json_valid", es => MySqlJsonValid(es.head), "built-in")
-    r.createOrReplaceTempFunction("mysql_json_contains_path", es => MySqlJsonContainsPath(es), "built-in")
-    r.createOrReplaceTempFunction("mysql_json_array", es => MySqlJsonArray(es), "built-in")
-    r.createOrReplaceTempFunction("mysql_json_object", es => MySqlJsonObject(es), "built-in")
-    r.createOrReplaceTempFunction("mysql_json_quote", es => MySqlJsonQuote(es.head), "built-in")
-    r.createOrReplaceTempFunction("mysql_cast_string_as_json", es => MySqlCastStringAsJson(es.head), "built-in")
-  }
 }

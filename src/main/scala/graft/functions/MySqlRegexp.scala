@@ -183,11 +183,4 @@ object MySqlRegexpFunctions {
   def mysql_regexp_replace(expr: Column, pat: Column, repl: Column, pos: Column,
       occur: Column, matchType: Column): Column =
     col(MySqlRegexpReplace(Seq(expr, pat, repl, pos, occur, matchType).map(ex)))
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction("mysql_regexp_instr", es => MySqlRegexpInstr(es), "built-in")
-    r.createOrReplaceTempFunction("mysql_regexp_substr", es => MySqlRegexpSubstr(es), "built-in")
-    r.createOrReplaceTempFunction("mysql_regexp_replace", es => MySqlRegexpReplace(es), "built-in")
-  }
 }

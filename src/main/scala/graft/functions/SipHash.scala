@@ -61,11 +61,6 @@ object SipHash {
   /** Column API: sip_hash64(stringCol) with the reference's zero key. */
   def sipHash64(c: Column): Column =
     ColumnBridge.column(SipHash64Expr(ColumnBridge.expression(c)))
-
-  /** Register `sip_hash64` for SQL use on a live session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sip_hash64", es => SipHash64Expr(es.head), "built-in")
 }
 
 /** `sip_hash64(string) -> long` with the zero key, matching the

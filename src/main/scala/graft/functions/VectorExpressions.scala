@@ -346,7 +346,7 @@ case class VecL2SqDistanceF(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** Column-API facade + SQL registration. */
+/** Column-API facade (SQL names: [[graft.GraftExtensions.functions]]). */
 object VectorFunctions {
   private def c(e: Expression): Column = ColumnBridge.column(e)
   private def x(col: Column): Expression = ColumnBridge.expression(col)
@@ -365,16 +365,4 @@ object VectorFunctions {
   def vec_dot_long(a: Column, b: Column): Column = c(VecDotLong(x(a), x(b)))
   def vec_l2sq_distance_f(a: Column, b: Column): Column =
     c(VecL2SqDistanceF(x(a), x(b)))
-
-  /** Register the vector functions for SQL use (≙ the closed tipb
-    * function registry; `registerFunctions.cpp`). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction("vec_l1_distance", es => VecL1Distance(es(0), es(1)), "built-in")
-    r.createOrReplaceTempFunction("vec_l2_distance", es => VecL2Distance(es(0), es(1)), "built-in")
-    r.createOrReplaceTempFunction("vec_negative_inner_product",
-      es => VecNegativeInnerProduct(es(0), es(1)), "built-in")
-    r.createOrReplaceTempFunction("vec_cosine_distance", es => VecCosineDistance(es(0), es(1)), "built-in")
-    r.createOrReplaceTempFunction("vec_l2_norm", es => VecL2Norm(es.head), "built-in")
-  }
 }

@@ -928,8 +928,11 @@ object TextPipeline {
     // the verify joins); persist it once (memory-and-disk) or the whole
     // explode→df-join→collect lineage recomputes per consumer — the
     // standard SSJoin materialization, ~the corpus's token count in
-    // ints, spillable at scale.
-    val rs = e.join(ranked, "w")
+    // ints, spillable at scale. Both sides grow with the corpus
+    // vocabulary, so the join is pinned to sort-merge (the q215 rule:
+    // never broadcast); left to AQE it flipped to a broadcast-hash
+    // join on some runs, and each flip compiled a new class.
+    val rs = e.join(ranked.hint("merge"), "w")
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("rank"))).as("rs"))
       .withColumn("n", size(col("rs")))

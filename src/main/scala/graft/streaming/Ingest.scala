@@ -185,11 +185,12 @@ object Ingest {
     * partition columns and rewrite — file-count hygiene, read-identical
     * by construction (the Lucene-segment / delta-merge rewrite form). */
   case object Rewrite extends Compaction
-  /** Rows are mergeable states: `view(spark, pile)` folds the pile
-    * into a generation its read view re-folds unchanged. `stamped`
-    * marks the generation `_folded` (one row per key), which the
-    * dup-span probe's fast path trusts. */
-  final case class Fold(view: (SparkSession, String) => DataFrame,
+  /** Rows are mergeable states: `view(spark, pile)` is the family's
+    * read view over the rows [[readPile]] gives, folding them into a
+    * generation the same view re-folds unchanged. `stamped` marks the
+    * generation `_folded` (one row per key), which the dup-span probe's
+    * fast path trusts. */
+  final case class Fold(view: (SparkSession, String) => DataFrame => DataFrame,
       stamped: Boolean = false) extends Compaction
 
   /** A pile family, parameterized by the identity `I` an ingest
@@ -212,10 +213,9 @@ object Ingest {
     * mergeable states. */
   object Piles {
     import graft.operators.{InvertedText, Similarity, TextPipeline}
-    private def bucketOf(c: Column, b: Int): Column = pmod(abs(hash(c)), lit(b))
     private val buckets: Seq[(Marker, Int => String)] =
       Seq(Marker.Buckets -> ((b: Int) => b.toString))
-    private def termBuckets(b: Int)(df: DataFrame): DataFrame =
+    private def withTermBucket(b: Int)(df: DataFrame): DataFrame =
       df.withColumn("tbucket", bucketOf(col("term"), b))
 
     /** IVF assignments to a fixed centroid set, per inverted list. The
@@ -231,22 +231,22 @@ object Ingest {
     /** Boolean postings (term → sorted doc list, df); the fold merges
       * the per-segment lists term by term. */
     val postings: SegmentPile[Int] = SegmentPile(
-      b => batch => termBuckets(b)(InvertedText.buildPostings(batch)),
+      b => batch => withTermBucket(b)(InvertedText.buildPostings(batch)),
       Seq("tbucket"), buckets,
-      Fold((spark, path) => termBuckets(bucketsOf(spark, path))(
-        mergePostingsSegments(spark.read.parquet(path).drop("tbucket", "seg")))))
+      Fold((spark, path) => rows =>
+        withTermBucket(bucketsOf(spark, path))(mergePostingsSegments(rows))))
     /** (term, doc_id, tf, dl) rows for BM25. */
     val tfPostings: SegmentPile[Int] = SegmentPile(
-      b => batch => termBuckets(b)(InvertedText.buildTfPostings(batch)),
+      b => batch => withTermBucket(b)(InvertedText.buildTfPostings(batch)),
       Seq("tbucket"), buckets)
     /** (term, doc_id, pos) occurrence rows for phrase search. */
     val posPostings: SegmentPile[Int] = SegmentPile(
-      b => batch => termBuckets(b)(batch.select(col("doc_id"),
+      b => batch => withTermBucket(b)(batch.select(col("doc_id"),
         posexplode(split(trim(col("text")), "\\s+")).as(Seq("pos", "term")))),
       Seq("tbucket"), buckets)
     /** BM25's corpus constants as one mergeable-sum row per segment. */
     val docStats: SegmentPile[Unit] = SegmentPile(_ => docStatsPartial,
-      compaction = Fold((spark, path) => docStatsView(spark.read.parquet(path))))
+      compaction = Fold((_, _) => docStatsView))
     /** MinHash banding rows per (band, bucket-hash). */
     val lsh: SegmentPile[(Int, Int, Int)] = SegmentPile(
       { case (b, nh, bs) => batch => TextPipeline.minhashBands(batch, nh, bs)
@@ -267,10 +267,8 @@ object Ingest {
       * the aggregate's exchange — and stamps the generation. */
     val dupSpan: SegmentPile[Column => Column] = SegmentPile(
       hashOf => batch => TextPipeline.dupSpanPartial(batch, hashOf),
-      compaction = Fold((spark, path) => spark.read.parquet(path)
-          .repartition(foldPartitions(spark, path), col("hk"), col("g"))
-          .groupBy(col("hk"), col("g"))
-          .agg(sum(col("c")).cast("long").as("c")),
+      compaction = Fold((spark, path) => rows => dupSpanCounts(
+          rows.repartition(foldPartitions(spark, path), col("hk"), col("g"))),
         stamped = true))
     /** Pointer-state window counts: per-(batch, text) rows cannot fold
       * without the text, so auto-compaction rewrites; the true fold is
@@ -279,7 +277,7 @@ object Ingest {
       hashOf => batch => TextPipeline.dupSpanPartialPtr(batch, hashOf))
     /** The events rollup's mergeable partial states. */
     val aggMv: SegmentPile[Unit] = SegmentPile(_ => aggPartial,
-      compaction = Fold((spark, path) => aggViewOf(spark.read.parquet(path))),
+      compaction = Fold((_, _) => aggViewOf),
       prep = Tables.normalizeEventsTs)
   }
 
@@ -298,30 +296,32 @@ object Ingest {
     runAvailableNow(spark, inputDir, s"$path-ckpt", pile.prep) { (batch, batchId) =>
       writeGeneration(pile.segment(id)(batch), pile.partitionCols, seg(path, batchId))
     }
-    if (SegmentCompactionPolicy.shouldCompact(segmentIds(spark, path).size,
-        autoCompactSegments) && pileHasData(spark, path))
+    if (SegmentCompactionPolicy.shouldCompact(segmentDirs(spark, path).count(_ >= 0),
+        autoCompactSegments))
       compactPile(spark, pile, path)
   }
 
   /** Compact the pile at `path` into one generation in its family's
-    * form. The live markers are read (or the compaction refused) and
-    * ride the new generation through [[promoteCompacted]]. */
-  private def compactPile(spark: SparkSession, pile: SegmentPile[_], path: String): Unit = {
-    val live = pile.markers.map { case (m, _) => m -> liveMarker(spark, path, m) }
-    requireCheckpointCaughtUp(spark, path)
-    promoteCompacted(spark, path, live) { tmp =>
-      pile.compaction match {
-        case Rewrite =>
-          val rows = spark.read.parquet(path).drop("seg")
-          val cols = pile.partitionCols.map(col)
-          writeGeneration(if (cols.isEmpty) rows else rows.repartition(cols: _*),
-            pile.partitionCols, compactedSeg(tmp))
-        case Fold(view, stamped) =>
-          writeGeneration(view(spark, path), pile.partitionCols, compactedSeg(tmp))
-          if (stamped) stampFolded(spark, compactedSeg(tmp))
+    * form; a pile with no data has nothing to compact. The live markers
+    * are read (or the compaction refused) and ride the new generation
+    * through [[promoteCompacted]]. */
+  private def compactPile(spark: SparkSession, pile: SegmentPile[_], path: String): Unit =
+    readPile(spark, path).foreach { read =>
+      val live = pile.markers.map { case (m, _) => m -> liveMarker(spark, path, m) }
+      requireCheckpointCaughtUp(spark, path, read.segments)
+      promoteCompacted(spark, path, live) { tmp =>
+        pile.compaction match {
+          case Rewrite =>
+            val cols = pile.partitionCols.map(col)
+            writeGeneration(if (cols.isEmpty) read.rows else read.rows.repartition(cols: _*),
+              pile.partitionCols, compactedSeg(tmp))
+          case Fold(view, stamped) =>
+            writeGeneration(view(spark, path)(read.rows), pile.partitionCols,
+              compactedSeg(tmp))
+            if (stamped) stampFolded(spark, compactedSeg(tmp))
+        }
       }
     }
-  }
 
   private def writeGeneration(df: DataFrame, partitionCols: Seq[String], dir: String): Unit = {
     val w = df.write.mode("overwrite")
@@ -416,9 +416,12 @@ object Ingest {
   def ivfProbe(spark: SparkSession, indexPath: String, queries: DataFrame,
       nProbe: Int, k: Int = 10): DataFrame = {
     import graft.functions.VectorFunctions.{vec_l2_distance, vec_cosine_distance}
-    if (!pileHasData(spark, indexPath))
-      return spark.range(0).select(col("id").as("qid"), col("id").as("vec_id"),
-        col("id").cast("int").as("rnk"), col("id").cast("double").as("dist"))
+    val pile = readPile(spark, indexPath) match {
+      case Some(p) => p
+      case None => return spark.range(0).select(col("id").as("qid"),
+        col("id").as("vec_id"), col("id").cast("int").as("rnk"),
+        col("id").cast("double").as("dist"))
+    }
     val cent = readIvfCentroids(spark, indexPath)
     val wProbe = Window.partitionBy(col("qid")).orderBy(col("cdist"), col("cid"))
     val probed = queries.select(col("qid"), col("qv"))
@@ -436,7 +439,7 @@ object Ingest {
       // (the lshProbe touched-partition discipline)
       val touched = probed.select(col("cid")).distinct()
         .collect().map(_.getLong(0))
-      val pruned = spark.read.parquet(indexPath)
+      val pruned = pile.rows
         .filter(col("cid").isin(touched: _*))
         .select(col("vec_id"), col("embedding"), col("cid"))
       val wRank = Window.partitionBy(col("qid")).orderBy(col("dist"), col("vec_id"))
@@ -476,15 +479,16 @@ object Ingest {
   def rebuildIvfIndex(spark: SparkSession, indexPath: String,
       newCent: DataFrame): Unit = {
     val fp = centroidFingerprint(newCent)
-    requireCheckpointCaughtUp(spark, indexPath)
+    val pile = readPile(spark, indexPath).getOrElse(throw new java.io.IOException(
+      s"rebuildIvfIndex: pile $indexPath holds no vectors to re-assign"))
+    requireCheckpointCaughtUp(spark, indexPath, pile.segments)
     val sib = new org.apache.hadoop.fs.Path(centroidSiblingPath(indexPath))
     val next = new org.apache.hadoop.fs.Path(centroidSiblingPath(indexPath) + ".next")
     val fs = sib.getFileSystem(spark.sparkContext.hadoopConfiguration)
     newCent.write.mode("overwrite").parquet(next.toString)
     promoteCompacted(spark, indexPath, Seq(Marker.Centroids -> fp)) { tmp =>
       graft.operators.Similarity.ivfAssign(
-          spark.read.parquet(indexPath).select(col("vec_id"), col("embedding")),
-          newCent)
+          pile.rows.select(col("vec_id"), col("embedding")), newCent)
         .write.mode("overwrite").partitionBy("cid").parquet(compactedSeg(tmp))
     }
     fs.delete(sib, true)
@@ -547,9 +551,11 @@ object Ingest {
   def ivfNearDupProbe(spark: SparkSession, indexPath: String,
       batchEmb: DataFrame, simThreshold: Double): DataFrame = {
     import graft.functions.VectorFunctions.vec_cosine_distance
-    if (!pileHasData(spark, indexPath))
-      return spark.range(0).select(col("id").as("new_id"),
+    val pile = readPile(spark, indexPath) match {
+      case Some(p) => p
+      case None => return spark.range(0).select(col("id").as("new_id"),
         col("id").as("old_id"), col("id").cast("double").as("sim"))
+    }
     val cent = readIvfCentroids(spark, indexPath)
     val assigned = graft.operators.Similarity.ivfAssign(batchEmb, cent)
       .select(col("vec_id").as("new_id"), col("embedding").as("nv"), col("cid"))
@@ -559,7 +565,7 @@ object Ingest {
       // by the √N rule) — pushed as partition filters like every probe
       val touched = assigned.select(col("cid")).distinct()
         .collect().map(_.getLong(0))
-      val pruned = spark.read.parquet(indexPath)
+      val pruned = pile.rows
         .filter(col("cid").isin(touched: _*))
         .select(col("vec_id").as("old_id"), col("embedding").as("ov"), col("cid"))
       graft.CacheHygiene.materialized(
@@ -645,22 +651,18 @@ object Ingest {
     * oracled by that SQL verbatim (q267). */
   def bm25Probe(spark: SparkSession, indexPath: String, statsPath: String,
       terms: Seq[String], k: Int = 10): DataFrame = {
-    if (!pileHasData(spark, indexPath) || !pileHasData(spark, statsPath))
-      return spark.range(0).select(col("id").as("doc_id"),
-        col("id").as("n_terms"), col("id").cast("double").as("bm25"))
-    val b = bucketsOf(spark, indexPath)
-    import spark.implicits._
-    // |terms|-row driver-side bucket computation (the q264 discipline):
-    // literals reach the pile scan as partition filters
-    val tb = terms.toDF("term")
-      .select(pmod(abs(hash(col("term"))), lit(b)).cast("int"))
-      .collect().map(_.getInt(0)).distinct.toSeq
-    val tf = spark.read.parquet(indexPath)
-      .filter(col("tbucket").isin(tb: _*) &&
+    val (tfPile, statsPile) =
+      (readPile(spark, indexPath), readPile(spark, statsPath)) match {
+        case (Some(t), Some(st)) => (t, st)
+        case _ => return spark.range(0).select(col("id").as("doc_id"),
+          col("id").as("n_terms"), col("id").cast("double").as("bm25"))
+      }
+    val tf = tfPile.rows
+      .filter(col("tbucket").isin(termBucketIds(spark, indexPath, terms): _*) &&
         col("term").isin(terms.map(_.asInstanceOf[Any]): _*))
       .select(col("term"), col("doc_id"), col("tf"), col("dl"))
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val st = docStatsView(spark.read.parquet(statsPath))
+    val st = docStatsView(statsPile.rows)
       .select(col("n_docs").as("n"), col("total_len").as("total"))
     val contrib = log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1) *
       (col("tf") * 2.2) /
@@ -704,16 +706,13 @@ object Ingest {
     * a from-scratch index — oracled by q142's SQL verbatim (q269). */
   def phraseProbe(spark: SparkSession, indexPath: String,
       first: String, second: String): DataFrame = {
-    if (!pileHasData(spark, indexPath))
-      return spark.range(0).select(col("id").as("doc_id"),
+    val pile = readPile(spark, indexPath) match {
+      case Some(p) => p
+      case None => return spark.range(0).select(col("id").as("doc_id"),
         col("id").as("n_occurrences"))
-    val b = bucketsOf(spark, indexPath)
-    import spark.implicits._
-    val tb = Seq(first, second).toDF("term")
-      .select(pmod(abs(hash(col("term"))), lit(b)).cast("int"))
-      .collect().map(_.getInt(0)).distinct.toSeq
-    val pruned = spark.read.parquet(indexPath)
-      .filter(col("tbucket").isin(tb: _*))
+    }
+    val pruned = pile.rows
+      .filter(col("tbucket").isin(termBucketIds(spark, indexPath, Seq(first, second)): _*))
       .select(col("term"), col("doc_id"), col("pos"))
     val a = pruned.filter(col("term") === first)
       .select(col("doc_id"), col("pos").as("pa"))
@@ -792,7 +791,7 @@ object Ingest {
     s
   }
 
-  private[streaming] def bucketsOf(spark: SparkSession, path: String): Int =
+  private def bucketsOf(spark: SparkSession, path: String): Int =
     markerInts(path, Marker.Buckets, liveMarker(spark, path, Marker.Buckets)).head
 
   /** Refuse an ingest whose identity differs from the pile's, or into
@@ -807,7 +806,7 @@ object Ingest {
           s"pile at $path was built with a different ${m.what} ($stored); refusing " +
             s"ingest with $value — a pile mixing them assigns incomparable keys and " +
             "silently drops matches. Rebuild the pile to change it")
-      case None if segmentsPresent(spark, path) => throw missingMarker(path, m)
+      case None if segmentDirs(spark, path).nonEmpty => throw missingMarker(path, m)
       case _ => ()
     }
 
@@ -851,54 +850,70 @@ object Ingest {
     }
   }
 
-  /** seg=N (N ≥ 0) directories currently in a pile — the ingested,
-    * not-yet-folded segments. seg=-1 (the compacted generation) is
-    * excluded: it never replays and never re-folds uncommitted data. */
-  private def segmentIds(spark: SparkSession, path: String): Seq[Long] = {
+  /** The `seg=<id>` directories of a pile, the compacted generation's
+    * -1 included; empty for an absent pile. The marker checks and the
+    * compaction trigger need no more than this. */
+  private def segmentDirs(spark: SparkSession, path: String): Seq[Long] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).map(_.getPath.getName).toSeq
-      .filter(_.startsWith("seg="))
-      .map(_.stripPrefix("seg=").toLong)
-      .filter(_ >= 0L)
+      .filter(_.startsWith("seg=")).map(_.stripPrefix("seg=").toLong)
   }
 
-  private def segmentsPresent(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith("seg="))
+  /** A pile as the engine reads it: `rows` without the `seg` column
+    * partition discovery adds, resolved on first use (so a compaction
+    * resolves them inside [[promoteCompacted]], after the listing its
+    * concurrent-append guard compares); the live segment ids, seg=-1
+    * excluded (it never replays); and `folded`, the probes' fast-path
+    * test: seg=-1 only AND the fold compactor's `_folded` stamp. The
+    * stamp, not seg-emptiness, is the evidence: a REWRITE compactor
+    * also leaves one seg=-1 generation but keeps per-batch partial
+    * rows, so trusting "one generation ⇒ one row per window" would
+    * under-match split c=1+c=1 rows. */
+  final class PileRead private[Ingest] (spark: SparkSession, path: String,
+      val segments: Seq[Long], val folded: Boolean) {
+    lazy val rows: DataFrame = spark.read.parquet(path).drop("seg")
   }
 
-  /** True iff the pile holds at least one parquet data file. An
-    * EMPTY-batch ingest can commit a segment directory with no part
-    * files (the write of a 0-partition frame emits only _SUCCESS);
-    * probing such a pile must be an empty result, and reading it via
-    * spark.read.parquet would throw schema inference errors — so the
-    * probes gate on data files, not directory existence. */
-  private[streaming] def pileHasData(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return false
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(".parquet")) return true
+  /** The one place a pile directory becomes rows: every engine read of
+    * a pile goes through it. Lists the pile once; a pile without a
+    * parquet data file reads as None — absent, marker-only, or holding
+    * only empty-batch segments (the write of a 0-partition frame
+    * commits a segment directory with nothing but _SUCCESS, and
+    * inferring a schema from it would throw). */
+  def readPile(spark: SparkSession, path: String): Option[PileRead] = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val segs = segmentDirs(spark, path)
+    def hasData(id: Long): Boolean = {
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(root, s"seg=$id"), true)
+      var found = false
+      while (!found && it.hasNext) found = it.next().getPath.getName.endsWith(".parquet")
+      found
     }
-    false
+    if (!segs.exists(hasData)) None
+    else {
+      val live = segs.filter(_ >= 0)
+      Some(new PileRead(spark, path, live, live.isEmpty &&
+        fs.exists(new org.apache.hadoop.fs.Path(root, "seg=-1/_folded"))))
+    }
   }
 
-  /** True iff the pile is a single FOLD-compacted generation: seg=-1
-    * only AND the fold compactor's `_folded` stamp present. The stamp
-    * (not seg-emptiness) is the load-bearing evidence: a REWRITE-form
-    * compactor also leaves one seg=-1 generation but keeps per-batch
-    * partial rows, so a "single generation ⇒ one row per window"
-    * assumption silently under-matches split c=1+c=1 rows (the r14
-    * StreamingSpec catch). Probes use this to pick their folded fast
-    * path; an unstamped generation always takes the full re-group. */
-  private def foldedGeneration(spark: SparkSession, statePath: String): Boolean = {
-    if (segmentIds(spark, statePath).nonEmpty) return false
-    val m = new org.apache.hadoop.fs.Path(s"$statePath/seg=-1/_folded")
-    m.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(m)
+  /** The one bucket rule: the partition value ingest writes for key `c`
+    * under modulus `b`, and the value every probe recomputes to prune
+    * its scan. A probe computing it any other way silently drops
+    * matches — their rows sit in partitions it never reads. */
+  private[graft] def bucketOf(c: Column, b: Int): Column = pmod(abs(hash(c)), lit(b))
+
+  /** The term buckets of `terms` under the pile's own modulus (its
+    * marker): a |terms|-row driver-side evaluation, so the bucket
+    * literals reach the pile scan as partition filters. */
+  private[graft] def termBucketIds(spark: SparkSession, path: String,
+      terms: Seq[String]): Seq[Int] = {
+    import spark.implicits._
+    terms.toDF("term").select(bucketOf(col("term"), bucketsOf(spark, path)).cast("int"))
+      .collect().map(_.getInt(0)).distinct.toSeq
   }
 
   /** Stamp a freshly-written FOLD generation (`gen` = its seg=-1 dir)
@@ -942,8 +957,7 @@ object Ingest {
     * commit log at the conventional checkpoint path is refused too —
     * its replay horizon is unknowable. */
   private def requireCheckpointCaughtUp(spark: SparkSession,
-      pilePath: String): Unit = {
-    val segs = segmentIds(spark, pilePath)
+      pilePath: String, segs: Seq[Long]): Unit = {
     if (segs.isEmpty) return // only seg=-1 (or nothing): nothing can replay
     val maxSeg = segs.max
     val commits = new org.apache.hadoop.fs.Path(s"$pilePath-ckpt/commits")
@@ -975,9 +989,11 @@ object Ingest {
       maxBucket: Int = 32, refuseDegenerate: Boolean = false): DataFrame = {
     // first-boot ordering: probing a never-created (or created-but-
     // data-less) index is an empty result, not an AnalysisException
-    if (!pileHasData(spark, indexPath))
-      return spark.range(0)
+    val pile = readPile(spark, indexPath) match {
+      case Some(p) => p
+      case None => return spark.range(0)
         .select(col("id").as("new_doc"), col("id").as("old_doc"))
+    }
     // read the markers, never guess (a mismatched recompute drops
     // matches silently); segments are present here, so a missing
     // marker is refused
@@ -992,7 +1008,7 @@ object Ingest {
     // of the jobs below must not strand the cache in a long-running
     // per-tick gate loop.
     val probe = graft.operators.TextPipeline.minhashBands(batchDocs, nh, bs)
-      .withColumn("bbucket", pmod(abs(hash(col("bucket"))), lit(b)))
+      .withColumn("bbucket", bucketOf(col("bucket"), b))
       .withColumnRenamed("doc_id", "new_doc")
       .persist()
     try {
@@ -1006,7 +1022,7 @@ object Ingest {
       val prune = touched
         .map { case (bd, bb) => col("band") === bd && col("bbucket") === bb }
         .reduceOption(_ || _).getOrElse(lit(false))
-      val grouped = spark.read.parquet(indexPath).filter(prune)
+      val grouped = pile.rows.filter(prune)
         .groupBy(col("band"), col("bbucket"), col("bucket"))
         .agg(collect_list(col("doc_id")).as("old_ids"))
       // The degenerate-bucket cap bounds join fan-out under boilerplate
@@ -1139,19 +1155,21 @@ object Ingest {
     * candidates). */
   def shingleFetch(spark: SparkSession, pilePath: String,
       ids: DataFrame): DataFrame = {
-    if (!pileHasData(spark, pilePath)) {
-      if (!ids.isEmpty) throw new java.io.IOException(
-        s"shingle pile at $pilePath has no data but candidate partners need " +
-          "their shingle sets — maintain the pile in tandem with the LSH " +
-          "index (streamShingleIngest per micro-batch) or fall back to the " +
-          "documents-table fetch")
-      return spark.range(0)
-        .select(col("id").as("old_doc"),
-          array().cast("array<string>").as("sh"))
+    val pile = readPile(spark, pilePath) match {
+      case Some(p) => p
+      case None =>
+        if (!ids.isEmpty) throw new java.io.IOException(
+          s"shingle pile at $pilePath has no data but candidate partners need " +
+            "their shingle sets — maintain the pile in tandem with the LSH " +
+            "index (streamShingleIngest per micro-batch) or fall back to the " +
+            "documents-table fetch")
+        return spark.range(0)
+          .select(col("id").as("old_doc"),
+            array().cast("array<string>").as("sh"))
     }
     val b = bucketsOf(spark, pilePath)
     val want = ids.select(col("old_doc")).distinct()
-      .withColumn("dbucket", pmod(abs(hash(col("old_doc"))), lit(b)))
+      .withColumn("dbucket", bucketOf(col("old_doc"), b))
       .persist()
     try {
       // touched buckets are bounded by the modulus itself (<= b ints)
@@ -1164,7 +1182,7 @@ object Ingest {
       // any SF; keep the exchange keyed on the high-cardinality doc id.
       // Materialize (candidate-bounded rows) while the `want` cache is
       // alive; the small persisted result is swept by the caller.
-      graft.CacheHygiene.materialized(spark.read.parquet(pilePath).filter(prune)
+      graft.CacheHygiene.materialized(pile.rows.filter(prune)
         .join(want.select(col("old_doc")).hint("shuffle_hash"),
           col("doc_id") === col("old_doc"), "left_semi")
         .select(col("doc_id").as("old_doc"), col("sh")))
@@ -1201,9 +1219,13 @@ object Ingest {
     * on g (not hk alone) means two distinct windows colliding on the
     * 64-bit hash can never pool their counts into a false duplicate. */
   def dupHashView(segments: DataFrame): DataFrame =
+    dupSpanCounts(segments).filter(col("c") >= 2).select(col("hk"), col("g"))
+
+  /** The dup-span pile's read view: window counts summed per (hash,
+    * window text) — exactly the generation its fold writes. */
+  def dupSpanCounts(segments: DataFrame): DataFrame =
     segments.groupBy(col("hk"), col("g"))
       .agg(sum(col("c")).cast("long").as("c"))
-      .filter(col("c") >= 2).select(col("hk"), col("g"))
 
   /** Dedup-at-ingest probe for dup spans: mark the MAXIMAL duplicated
     * spans of a NEW batch against everything ingested so far (batch
@@ -1229,10 +1251,9 @@ object Ingest {
     // first-boot ordering: probing before any maintenance run has
     // created (and populated) the state is an empty result, not an
     // AnalysisException
-    val dup =
-      if (!pileHasData(spark, statePath))
-        spark.range(0).select(col("id").as("hk"), lit("").as("g"))
-      else if (foldedGeneration(spark, statePath))
+    val dup = readPile(spark, statePath) match {
+      case None => spark.range(0).select(col("id").as("hk"), lit("").as("g"))
+      case Some(pile) if pile.folded =>
         // the pile is a single FOLD-compacTED generation (seg=-1 only
         // AND carrying the compactor's `_folded` stamp — ADVICE r14 #2:
         // seg-emptiness alone is NOT fold-shaped evidence, exactly as
@@ -1244,9 +1265,9 @@ object Ingest {
         // fold on the compaction policy, so most ticks probe a folded
         // generation. An unstamped single generation falls through to
         // the re-group below — always correct, just not fast-pathed.
-        spark.read.parquet(statePath)
-          .filter(col("c") >= 2).select(col("hk"), col("g"))
-      else dupHashView(spark.read.parquet(statePath))
+        pile.rows.filter(col("c") >= 2).select(col("hk"), col("g"))
+      case Some(pile) => dupHashView(pile.rows)
+    }
     val hits = graft.operators.TextPipeline.charWindowHashes(batchDocs, hashOf)
       // corpus-derived: never broadcast (q215 rule)
       .join(dup.hint("shuffle_hash"), Seq("hk", "g"))
@@ -1293,9 +1314,11 @@ object Ingest {
       corpusDocs: DataFrame, batchDocs: DataFrame,
       hashOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         xxhash64(_)): DataFrame = {
-    if (!pileHasData(spark, statePath))
-      return graft.operators.TextPipeline.mergeSpans(spark.range(0)
+    val pile = readPile(spark, statePath) match {
+      case Some(p) => p
+      case None => return graft.operators.TextPipeline.mergeSpans(spark.range(0)
         .select(col("id").as("doc_id"), col("id").as("i"), col("id").as("e")))
+    }
     // A FOLD-compacted pile has exactly one row per distinct corpus
     // window, so a c = 1 row can never reach the >= 2 confirmed
     // total — filter it out BEFORE the join. This is the same 20×
@@ -1314,9 +1337,8 @@ object Ingest {
     // Non-folded state joins sort-merge — spill-safe at any state
     // size — and is the policy-bounded transient shape anyway (a probe
     // at scale runs against a folded generation).
-    val folded = foldedGeneration(spark, statePath)
-    val raw = spark.read.parquet(statePath)
-      .select(col("hk"), col("o_doc"), col("o_i"), col("c"))
+    val folded = pile.folded
+    val raw = pile.rows.select(col("hk"), col("o_doc"), col("o_i"), col("c"))
     val st = if (folded) raw.filter(col("c") >= 2) else raw
     // Batch windows as KEYS only (r18, r17 VERDICT ask #4; guide §2.3
     // "shuffle keys and metadata instead of payloads"): the r17 shape
@@ -1408,11 +1430,11 @@ object Ingest {
     * future reader could tighten into an EMPTY read, which would
     * silently write an empty folded pile. */
   def compactDupSpanStatePtrFold(spark: SparkSession, statePath: String,
-      corpusDocs: DataFrame): Unit = {
-    requireCheckpointCaughtUp(spark, statePath)
+      corpusDocs: DataFrame): Unit = readPile(spark, statePath).foreach { pile =>
+    requireCheckpointCaughtUp(spark, statePath, pile.segments)
     promoteCompacted(spark, statePath, Nil) { tmp =>
       val staging = s"$tmp/prefold-staging"
-      spark.read.parquet(statePath).drop("seg")
+      pile.rows
         .repartition(foldPartitions(spark, statePath), col("hk"))
         .groupBy(col("hk"), col("o_doc"), col("o_i"))
         .agg(sum(col("c")).cast("long").as("c"))

@@ -59,25 +59,19 @@ object PileProbes {
   val q264FulltextStream: QueryDef = QueryDef(
     "q264_fulltext_stream",
     graft.operators.InvertedText.q75FulltextAnd.oracle.get) { (s, d) =>
-    val pile = postingsPileFor(s, d)
-    if (!Ingest.pileHasData(s, pile))
-      s.range(0).select(col("id").as("doc_id"), col("id").as("n_terms"))
-    else {
-      // the probed terms' bucket ids, computed by the pile's OWN
-      // term→bucket rule and modulus (its marker) — a |terms|-row
-      // driver-side evaluation (2 rows here) so the bucket literals
-      // reach the scan as partition filters (the lshProbe
-      // touched-partition discipline)
-      import s.implicits._
-      val tb = probeTerms.toDF("term")
-        .select(pmod(abs(hash(col("term"))), lit(Ingest.bucketsOf(s, pile))).cast("int"))
-        .collect().map(_.getInt(0)).distinct.toSeq
-      val pruned = s.read.parquet(pile)
-        .filter(col("tbucket").isin(tb: _*) &&
-          col("term").isin(probeTerms.map(_.asInstanceOf[Any]): _*))
-        .select(col("term"), col("postings"), col("df"))
-      graft.operators.InvertedText.searchAll(
-        Ingest.mergePostingsSegments(pruned), probeTerms)
+    val path = postingsPileFor(s, d)
+    Ingest.readPile(s, path) match {
+      case None => s.range(0).select(col("id").as("doc_id"), col("id").as("n_terms"))
+      case Some(pile) =>
+        // the probed terms' bucket ids come from the pile's OWN
+        // term→bucket rule and modulus (the lshProbe touched-partition
+        // discipline)
+        val pruned = pile.rows
+          .filter(col("tbucket").isin(Ingest.termBucketIds(s, path, probeTerms): _*) &&
+            col("term").isin(probeTerms.map(_.asInstanceOf[Any]): _*))
+          .select(col("term"), col("postings"), col("df"))
+        graft.operators.InvertedText.searchAll(
+          Ingest.mergePostingsSegments(pruned), probeTerms)
     }
   }.copy(headline = true, benchWarmup = Some { (s, d) =>
     // the pile is built UNTIMED (a live pipeline maintains it across
@@ -266,15 +260,14 @@ object PileProbes {
       |  COUNT(*) AS cnt,
       |  CAST(SUM(CAST(value AS DECIMAL(30,2))) AS DOUBLE) AS vsum
       |FROM events GROUP BY 1, 2""".stripMargin) { (s, d) =>
-    val pile = aggMvPileFor(s, d)
-    if (!Ingest.pileHasData(s, pile))
-      s.range(0).select(lit(null).cast("string").as("event_type"),
+    Ingest.readPile(s, aggMvPileFor(s, d)) match {
+      case None => s.range(0).select(lit(null).cast("string").as("event_type"),
         lit(null).cast("date").as("day"), col("id").as("cnt"),
         lit(null).cast("double").as("vsum"))
-    else
-      Ingest.aggViewOf(s.read.parquet(pile))
+      case Some(pile) => Ingest.aggViewOf(pile.rows)
         .select(col("event_type"), col("day"), col("cnt"),
           col("vsum").cast("double").as("vsum"))
+    }
   }
 
   // ------------------------------------------- q266: quantizer rotation

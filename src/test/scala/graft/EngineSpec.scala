@@ -20,6 +20,31 @@ class EngineSpec extends SparkTestBase {
     assert(joined.count() === 25)
   }
 
+  test("one function table: the extension injects it and attach installs it") {
+    import org.apache.spark.sql.SparkSessionExtensions
+    val names = GraftExtensions.functions.map(_._1.funcName)
+    val injected = scala.collection.mutable.ArrayBuffer.empty[String]
+    new GraftExtensions()(new SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = injected += f._1.funcName
+    })
+    assert(injected.toSeq === names, "the extension injects exactly the table")
+    assert(names.distinct === names)
+    // a session that lacks them gets every one from attach, each
+    // described by its own expression class
+    val bare = spark.newSession()
+    GraftExtensions.functions.foreach { case (id, _, _) =>
+      bare.sessionState.functionRegistry.dropFunction(id)
+    }
+    assert(names.filter(bare.catalog.functionExists) === Nil)
+    Engine.attach(bare, sf)
+    GraftExtensions.functions.foreach { case (id, info, _) =>
+      val described = bare.sql(s"DESCRIBE FUNCTION ${id.funcName}")
+        .collect().map(_.getString(0)).toSeq
+      assert(described.contains(s"Class: ${info.getClassName}"), described)
+    }
+    assert(bare.sql("SELECT nfc_normalize('Cafe\u0301')").head().getString(0) === "Café")
+  }
+
   test("execution summaries analog: observed metrics report per-stage counts") {
     // ≙ the reference streaming per-executor execution summaries back
     // to TiDB (`dbms/src/Flash/Statistics/ExecutionSummaryCollector.h`)

@@ -36,7 +36,6 @@ class JsonExpressionsSpec extends SparkTestBase {
   }
 
   test("json_depth registered for SQL") {
-    JsonFunctions.register(spark)
     assert(spark.sql("SELECT json_depth('[10, {\"a\": 20}]')").first().getInt(0) === 3)
   }
 }

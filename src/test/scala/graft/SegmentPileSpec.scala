@@ -14,20 +14,22 @@ import graft.operators.Similarity
   * read view equal to the two-segment one, and a root holding exactly
   * the promoted `seg=-1` generation plus the family's identity markers
   * with their exact contents. A crash between the promote's two
-  * renames must recover with every marker intact. */
+  * renames must recover with every marker intact. At every stage the
+  * engine's read (`Ingest.readPile`) gives the same view as a raw
+  * read of the directory. */
 class SegmentPileSpec extends SparkTestBase {
 
   /** One pile family: its source rows, how to ingest a micro-batch and
-    * compact, its read view (sorted rows as text, so a multiset
-    * compares exactly), the markers its root must carry, and whether
-    * its compacted generation is stamped `_folded`. */
+    * compact, its read view of the pile's rows (sorted rows as text, so
+    * a multiset compares exactly), the markers its root must carry, and
+    * whether its compacted generation is stamped `_folded`. */
   private case class Family(
       name: String,
       source: () => DataFrame,
       key: String,
       ingest: (String, String) => Unit,
       compact: String => Unit,
-      view: String => Seq[String],
+      view: DataFrame => Seq[String],
       markers: () => Map[String, String] = () => Map.empty,
       folded: Boolean = false)
 
@@ -47,51 +49,51 @@ class SegmentPileSpec extends SparkTestBase {
     Family("ivf", () => embeddings, "vec_id",
       (in, p) => Ingest.streamIvfIngest(spark, in, p, cent),
       p => Ingest.compactIvfIndex(spark, p),
-      p => rows(pile(p).select(col("vec_id"), col("cid").cast("long"))),
+      p => rows(p.select(col("vec_id"), col("cid").cast("long"))),
       () => Map("_centroids" -> Ingest.centroidFingerprint(cent))),
     Family("postings", () => docs, "doc_id",
       (in, p) => Ingest.streamPostingsIngest(spark, in, p, buckets = 8),
       p => Ingest.compactPostings(spark, p),
-      p => rows(Ingest.mergePostingsSegments(pile(p).drop("tbucket", "seg"))),
+      p => rows(Ingest.mergePostingsSegments(p.drop("tbucket", "seg"))),
       () => Map("_buckets" -> "8")),
     Family("tf-postings", () => docs, "doc_id",
       (in, p) => Ingest.streamTfPostingsIngest(spark, in, p),
       p => Ingest.compactTfPostings(spark, p),
-      p => rows(pile(p).select(col("term"), col("doc_id"), col("tf"), col("dl"))),
+      p => rows(p.select(col("term"), col("doc_id"), col("tf"), col("dl"))),
       () => Map("_buckets" -> "16")),
     Family("doc-stats", () => docs, "doc_id",
       (in, p) => Ingest.streamDocStatsIngest(spark, in, p),
       p => Ingest.compactDocStats(spark, p),
-      p => rows(Ingest.docStatsView(pile(p)))),
+      p => rows(Ingest.docStatsView(p))),
     Family("pos-postings", () => docs, "doc_id",
       (in, p) => Ingest.streamPosPostingsIngest(spark, in, p, buckets = 4),
       p => Ingest.compactPosPostings(spark, p),
-      p => rows(pile(p).select(col("term"), col("doc_id"), col("pos"))),
+      p => rows(p.select(col("term"), col("doc_id"), col("pos"))),
       () => Map("_buckets" -> "4")),
     Family("lsh", () => docs, "doc_id",
       (in, p) => Ingest.streamLshIngest(spark, in, p, buckets = 8,
         numHashes = 32, bandSize = 2),
       p => Ingest.compactLshIndex(spark, p),
-      p => rows(pile(p).select(col("doc_id"), col("band"), col("bucket"))),
+      p => rows(p.select(col("doc_id"), col("band"), col("bucket"))),
       () => Map("_buckets" -> "8", "_banding" -> "32 2")),
     Family("shingles", () => docs, "doc_id",
       (in, p) => Ingest.streamShingleIngest(spark, in, p),
       p => Ingest.compactShinglePile(spark, p),
-      p => rows(pile(p).select(col("doc_id"), sort_array(col("sh")))),
+      p => rows(p.select(col("doc_id"), sort_array(col("sh")))),
       () => Map("_buckets" -> "16")),
     Family("dup-span", () => docs, "doc_id",
       (in, p) => Ingest.streamDupSpanMaintain(spark, in, p),
       p => Ingest.compactDupSpanState(spark, p),
-      p => rows(Ingest.dupHashView(pile(p))),
+      p => rows(Ingest.dupHashView(p)),
       folded = true),
     Family("dup-span-ptr", () => docs, "doc_id",
       (in, p) => Ingest.streamDupSpanMaintainPtr(spark, in, p),
       p => Ingest.compactDupSpanStatePtr(spark, p),
-      p => rows(pile(p).select(col("hk"), col("o_doc"), col("o_i"), col("c")))),
+      p => rows(p.select(col("hk"), col("o_doc"), col("o_i"), col("c")))),
     Family("agg-mv", () => events, "event_id",
       (in, p) => Ingest.streamAggMaintain(spark, in, p),
       p => Ingest.compactAggState(spark, p),
-      p => rows(Ingest.aggViewOf(pile(p)).select(col("event_type"), col("day"),
+      p => rows(Ingest.aggViewOf(p).select(col("event_type"), col("day"),
         col("cnt"), col("vsum"), hll_sketch_estimate(col("users_hll")))))
   )
 
@@ -108,6 +110,14 @@ class SegmentPileSpec extends SparkTestBase {
         val s = fs.open(new Path(file))
         try scala.io.Source.fromInputStream(s, "UTF-8").mkString finally s.close()
       }
+      // the engine's read equals the raw read, with the pile's live
+      // segments and fold stamp as the directory shows them
+      def engineRead(stage: String, segments: Seq[Long], folded: Boolean): Unit = {
+        val read = Ingest.readPile(spark, p).getOrElse(fail(s"$stage: no data"))
+        assert(read.segments.sorted === segments, s"$stage: live segments")
+        assert(read.folded === folded, s"$stage: fold stamp")
+        assert(f.view(read.rows) === f.view(pile(p)), s"$stage: engine read = raw read")
+      }
       val src = f.source()
       for (m <- 0 until 2) {
         src.filter(pmod(col(f.key), lit(2)) === m).write.mode("append").parquet(in)
@@ -115,12 +125,14 @@ class SegmentPileSpec extends SparkTestBase {
       }
       val markers = f.markers()
       assert(children(p) === Set("seg=0", "seg=1") ++ markers.keySet)
-      val before = f.view(p)
+      val before = f.view(pile(p))
       assert(before.nonEmpty, "the fixture must put rows in the pile")
+      engineRead("two segments", Seq(0L, 1L), folded = false)
 
       f.compact(p)
-      assert(f.view(p) === before, "compaction must not change the read view")
+      assert(f.view(pile(p)) === before, "compaction must not change the read view")
       assert(children(p) === Set("seg=-1") ++ markers.keySet)
+      engineRead("compacted", Nil, f.folded)
       markers.foreach { case (name, value) =>
         assert(read(s"$p/$name") === value, s"$name content")
       }
@@ -137,7 +149,79 @@ class SegmentPileSpec extends SparkTestBase {
       markers.foreach { case (name, value) =>
         assert(read(s"$p/$name") === value, s"$name content after recovery")
       }
-      assert(f.view(p) === before, "recovery must not change the read view")
+      assert(f.view(pile(p)) === before, "recovery must not change the read view")
+      engineRead("recovered", Nil, f.folded)
+    }
+  }
+
+
+  test("readPile: absent, empty-batch, mixed and stamped piles; marker refusal") {
+    val base = Files.createTempDirectory("graft-pile-edges").toString
+    val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def touch(file: String): Unit = fs.create(new Path(file), true).close()
+    def write(df: DataFrame, dir: String): Unit = df.write.mode("overwrite").parquet(dir)
+    val three = spark.range(3).toDF("x")
+
+    assert(Ingest.readPile(spark, s"$base/absent").isEmpty, "an absent directory")
+    // an empty batch commits a segment directory holding only _SUCCESS
+    fs.mkdirs(new Path(s"$base/empty/seg=0"))
+    touch(s"$base/empty/seg=0/_SUCCESS")
+    touch(s"$base/empty/_buckets")
+    assert(Ingest.readPile(spark, s"$base/empty").isEmpty, "only _SUCCESS is no data")
+
+    // live segments next to a stamped seg=-1: not one folded generation,
+    // and the empty-batch segment still counts as live
+    write(three, s"$base/mixed/seg=-1")
+    touch(s"$base/mixed/seg=-1/_folded")
+    write(spark.range(3, 5).toDF("x"), s"$base/mixed/seg=2")
+    fs.mkdirs(new Path(s"$base/mixed/seg=3"))
+    touch(s"$base/mixed/seg=3/_SUCCESS")
+    val mixed = Ingest.readPile(spark, s"$base/mixed").get
+    assert(mixed.segments.sorted === Seq(2L, 3L))
+    assert(!mixed.folded)
+    assert(mixed.rows.columns.toSeq === Seq("x"), "the seg column is dropped")
+    assert(mixed.rows.collect().map(_.getLong(0)).sorted.toSeq === (0L until 5L))
+
+    // a stamped fold versus an unstamped rewrite generation
+    write(three, s"$base/folded/seg=-1")
+    touch(s"$base/folded/seg=-1/_folded")
+    write(three, s"$base/rewritten/seg=-1")
+    assert(Ingest.readPile(spark, s"$base/folded").get.folded)
+    assert(!Ingest.readPile(spark, s"$base/rewritten").get.folded)
+    assert(Ingest.readPile(spark, s"$base/folded").get.segments.isEmpty)
+
+    // a pile with data but no marker reads, and every probe refuses it
+    val in = s"$base/in"
+    write(docs, in)
+    Ingest.streamPosPostingsIngest(spark, in, s"$base/pos", buckets = 4)
+    assert(fs.delete(new Path(s"$base/pos/_buckets"), false))
+    assert(Ingest.readPile(spark, s"$base/pos").nonEmpty)
+    val e = intercept[java.io.IOException] {
+      Ingest.phraseProbe(spark, s"$base/pos", "hash", "join")
+    }
+    assert(e.getMessage.contains("no _buckets marker"))
+  }
+
+  test("the bucket a probe computes is the partition value ingest wrote") {
+    val base = Files.createTempDirectory("graft-pile-buckets").toString
+    val in = s"$base/in"
+    docs.write.mode("overwrite").parquet(in)
+    Ingest.streamTfPostingsIngest(spark, in, s"$base/tf", buckets = 8)
+    Ingest.streamShingleIngest(spark, in, s"$base/sh", buckets = 8)
+    Ingest.streamLshIngest(spark, in, s"$base/lsh", buckets = 8)
+    for ((pilePath, key, part) <- Seq(("tf", "term", "tbucket"),
+        ("sh", "doc_id", "dbucket"), ("lsh", "bucket", "bbucket"))) {
+      val raw = pile(s"$base/$pilePath")
+      val wrong = raw.filter(Ingest.bucketOf(col(key), 8) =!= col(part)).count()
+      assert(wrong === 0L, s"$pilePath: rows whose $part differs from the probe's bucket")
+      assert(raw.select(col(part)).distinct().count() > 1L,
+        s"$pilePath: the fixture must spread over buckets")
+    }
+    // the term probes' bucket literals, term by term
+    val written = pile(s"$base/tf").select(col("term"), col("tbucket")).distinct()
+      .orderBy(col("term")).limit(40).collect().map(r => r.getString(0) -> r.getInt(1))
+    written.foreach { case (term, bucket) =>
+      assert(Ingest.termBucketIds(spark, s"$base/tf", Seq(term)) === Seq(bucket), term)
     }
   }
 }

@@ -39,7 +39,6 @@ class SipHashSpec extends SparkTestBase {
     }.toMap
     assert(viaColumn === direct && viaColumn.nonEmpty)
     // SQL registration path
-    SipHash.register(spark)
     docs.createOrReplaceTempView("sip_docs")
     val viaSql = spark.sql("SELECT doc_id, sip_hash64(text) AS h FROM sip_docs")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap

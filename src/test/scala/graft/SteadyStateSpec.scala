@@ -47,11 +47,10 @@ class SteadyStateSpec extends SparkTestBase {
   }
 
   test("queries whose codegen stages race compile nothing on passes 2 and 3") {
-    // q201_ssjoin_prefix is left out: besides its stage ids, AQE plans its
-    // rank join as a broadcast-hash or a sort-merge join depending on which
-    // side's shuffle finishes first, and each flip compiles a new class
-    val raced = Seq("q197_kneser_ney", "q209_auc_eval", "q218_ivfpq_rerank",
-      "q258_crawl_capstone", "q259_crawl_capstone_ptr")
+    // q201_ssjoin_prefix pins its rank join to sort-merge: left to AQE, the
+    // join flipped to broadcast-hash on some runs and compiled a new class
+    val raced = Seq("q197_kneser_ney", "q201_ssjoin_prefix", "q209_auc_eval",
+      "q218_ivfpq_rerank", "q258_crawl_capstone", "q259_crawl_capstone_ptr")
     def pass(): Map[String, Long] = raced.map { q =>
       q -> compilesOf {
         SparkEntry.queries(q)(spark, sf01).write.format("noop").mode("overwrite").save()

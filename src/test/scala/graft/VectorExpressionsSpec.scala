@@ -67,7 +67,6 @@ class VectorExpressionsSpec extends SparkTestBase {
   }
 
   test("SQL registration") {
-    register(spark)
     val r = spark.sql(
       "SELECT vec_l2_distance(array(cast(0 as float), cast(3 as float)), " +
         "array(cast(4 as float), cast(0 as float)))").first()
