@@ -100,8 +100,8 @@ object GraftSession {
       // Generated class names carry no codegen stage id. AQE numbers
       // whole-stage codegen stages in the order it plans query stages,
       // which follows which shuffle finishes first, so with ids in the
-      // names a query whose stages race (q197, q201, q209, q218, q258,
-      // q259) produced new source text, and recompiled, on every run.
+      // names a query whose stages race (q197, q201, q209, q218, q258)
+      // produced new source text, and recompiled, on every run.
       .config("spark.sql.codegen.useIdInClassName", "false")
       // This box stalls under host CPU-credit throttling (documented in
       // docs/BENCH_NOTES.md): a multi-second freeze can miss enough

@@ -1107,27 +1107,6 @@ object TextPipeline {
     * the planted-collision contract substitutes a truncated hash to
     * make 64-bit collisions constructible (real xxhash64 collisions
     * are not brute-forceable in a test). */
-  /** The KEY form of [[charWindowHashes]] — identical (doc_id, i, hk)
-    * rows, WITHOUT materializing the 50-char window text `g` into the
-    * stream (r18, guide §2.3 "shuffle keys and metadata instead of
-    * payloads"): g is ~50 bytes per corpus CHARACTER, so any exchange
-    * that carries it moves ~50× the batch text. The pointer-state
-    * probe joins these keys on the 8-byte hash and re-derives both
-    * window texts for the CANDIDATE subset only (see
-    * [[graft.streaming.Ingest.dupSpanProbePtr]]). The hash is computed
-    * over the same substring expression, so hk is bit-identical to
-    * [[charWindowHashes]]'s. */
-  private[graft] def charWindowKeys(docsDf: DataFrame,
-      hashOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        xxhash64(_)): DataFrame =
-    Par.widen(docsDf)
-      .filter(length(col("text")) >= 50)
-      .select(col("doc_id"),
-        explode(expr("sequence(1, length(text) - 49)")).as("i"),
-        col("text"))
-      .select(col("doc_id"), col("i"),
-        hashOf(expr("substring(text, i, 50)")).as("hk"))
-
   private[graft] def charWindowHashes(docsDf: DataFrame,
       hashOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         xxhash64(_)): DataFrame =
@@ -1159,34 +1138,14 @@ object TextPipeline {
     * the 50-char window per DISTINCT window — O(corpus chars), the
     * same asymptotic class as the paper's suffix array (which also
     * keeps one pointer per char plus the corpus text resident), with a
-    * larger constant; the alternative (store (doc_id, i) pointers and
-    * re-fetch text from the corpus pile at probe time) trades state
-    * bytes for probe-time corpus reads and is the documented scale-out
-    * option. hk stays in the state so probe joins still shuffle on an
-    * 8-byte leading key and phase-1-style folds never touch text. */
+    * larger constant. hk stays in the state so probe joins still
+    * shuffle on an 8-byte leading key and phase-1-style folds never
+    * touch text. */
   private[graft] def dupSpanPartial(batch: DataFrame,
       hashOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         xxhash64(_)): DataFrame =
     charWindowHashes(batch, hashOf)
       .groupBy(col("hk"), col("g")).agg(count(lit(1)).as("c"))
-
-  /** The POINTER-state form of [[dupSpanPartial]]: one row per distinct
-    * in-batch window TEXT, but the text itself is dropped after the
-    * grouping — kept instead is a deterministic representative
-    * occurrence (the minimum (doc_id, i)) the probe can re-fetch the
-    * text from. 28 bytes per distinct window vs ~66 with the text
-    * resident; distinct texts colliding on hk stay separate ROWS (the
-    * grouping saw g), so the state never pools collision counts —
-    * exactness moves to the probe's fetch-and-compare. */
-  private[graft] def dupSpanPartialPtr(batch: DataFrame,
-      hashOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        xxhash64(_)): DataFrame =
-    charWindowHashes(batch, hashOf)
-      .groupBy(col("hk"), col("g"))
-      .agg(count(lit(1)).as("c"),
-        min(struct(col("doc_id"), col("i"))).as("rep"))
-      .select(col("hk"), col("rep.doc_id").as("o_doc"),
-        col("rep.i").as("o_i"), col("c"))
 
   /** q215's phase-1 candidate-join SHAPE, parameterized by the
     * `shuffle_hash` hint — used ONLY by `BroadcastAuditSpec` to prove

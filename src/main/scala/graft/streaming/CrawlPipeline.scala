@@ -38,10 +38,8 @@ import graft.operators.{Curation, TextPipeline}
   * side shingles O(batch) rows; partner sets come from the shingle
   * PILE ([[Ingest.streamShingleIngest]], maintained in tandem with the
   * banding index) as a partition-pruned point read — no corpus pass
-  * per tick (r13 VERDICT ask #3). Callers without a pile fall back to
-  * a semi-join fetch against `docsForConfirm` (one documents-table
-  * scan, the pre-r14 shape). Everything downstream of the probes is
-  * candidate- or batch-sized.
+  * per tick (r13 VERDICT ask #3). Everything downstream of the probes
+  * is candidate- or batch-sized.
   *
   * The decontamination Bloom prefilter is a Scala UDF by necessity,
   * not oversight (adjudicated r13): Spark exposes no `might_contain`
@@ -61,26 +59,16 @@ object CrawlPipeline {
 
   /** Run the four-gate pipeline for `batchDocs` against the maintained
     * piles. `benchDocs` is the contamination reference (benchmark
-    * documents); `docsForConfirm` supplies partner text for the
-    * near-dup exact confirm (candidate-bounded fetch); `arrivedEarlier`
-    * decides keep-first precedence between a new doc and a confirmed
-    * partner. `shinglePilePath`, when set, sources partner shingle sets
-    * from the incremental pile (partition-pruned point read — the
-    * production shape); otherwise they are recomputed from
-    * `docsForConfirm` via a semi-join fetch. Output: one row per batch
-    * document with per-gate flags, the accepted verdict, and
-    * first-failure attribution. */
+    * documents); `arrivedEarlier` decides keep-first precedence between
+    * a new doc and a confirmed partner. Partner shingle sets for the
+    * near-dup exact confirm come from the shingle pile at
+    * `shinglePilePath` (partition-pruned point read of the candidate
+    * partners only). Output: one row per batch document with per-gate
+    * flags, the accepted verdict, and first-failure attribution. */
   def crawlGate(spark: SparkSession, batchDocs: DataFrame,
-      benchDocs: DataFrame, docsForConfirm: DataFrame,
-      lshIndexPath: String, spanStatePath: String,
-      arrivedEarlier: (Column, Column) => Column,
-      shinglePilePath: Option[String] = None,
-      // the dup-span state-form seam: the default text-resident probe,
-      // or [[Ingest.dupSpanProbePtr]] partially applied over the
-      // ingested corpus for the pointer-state pile (q259) — the gate's
-      // OUTPUT is invariant across state forms (both collision-exact)
-      spanProbe: (SparkSession, String, DataFrame) => DataFrame =
-        Ingest.dupSpanProbe(_, _, _)): DataFrame = {
+      benchDocs: DataFrame, lshIndexPath: String, spanStatePath: String,
+      shinglePilePath: String,
+      arrivedEarlier: (Column, Column) => Column): DataFrame = {
     // ---- gate 1: decontamination (q212 kernel: Bloom prefilter, no
     // false negatives; exact gram join kills the false positives)
     val bench = Curation.corpusGrams(benchDocs, DecontamGramN)
@@ -97,7 +85,7 @@ object CrawlPipeline {
     // longer rests only on Await.result's happens-before; cand gets the
     // same treatment for uniformity (it is main-thread-only today).
     @volatile var cand: DataFrame = null
-    var pileFetch: Option[DataFrame] = None
+    var pileFetch: DataFrame = null
     @volatile var bloomBc: Option[org.apache.spark.broadcast.Broadcast[_]] = None
     try {
     // Gate 1's state build (bench-gram materialize + Bloom aggregation,
@@ -135,8 +123,7 @@ object CrawlPipeline {
     }
     val fCand = Future {
       blocking {
-        Ingest.lshProbe(spark, lshIndexPath, batchDocs,
-          maxBucket = 256, refuseDegenerate = true)
+        Ingest.lshProbe(spark, lshIndexPath, batchDocs)
       }
     }
     // await BOTH before composing: a failure in either must not leave
@@ -162,42 +149,25 @@ object CrawlPipeline {
     // handled by the other gates (identical tiny docs fail gopher's
     // 50-word floor; >= 50-char tiny dups fail dup_span) — and the
     // oracle carries the same >= 3-token restriction, so both sides
-    // agree on short-doc semantics. maxBucket is raised vs the q61
-    // default AND the probe runs refuseDegenerate: the capstone's
-    // contract is exact equivalence to the J >= 0.5 gate, and a
-    // dropped over-cap bucket would silently under-match (its members
-    // never reach the confirm step) — so an over-cap bucket raises
-    // loudly instead. Candidates stay bounded by batch × bands × cap.
+    // agree on short-doc semantics. The capstone's contract is exact
+    // equivalence to the J >= 0.5 gate, so the probe never drops an
+    // over-cap bucket (its members would never reach the confirm
+    // step): it raises loudly instead. Candidates stay bounded by
+    // batch × bands × Ingest.LshMaxBucket.
     // (cand itself was probed concurrently with gate 1 above.)
-    val minTokens = size(TextPipeline.tokens) >= 3
     // width repartition before the per-row shingling (r17, the q201
     // rule): the interpreted shingle HOF over the batch otherwise runs
     // at the one-file scan's parallelism (measured t=1, ~8 CPU-seconds
     // single-threaded per tick at sf0.1). Gated on scan splits (r18).
     val newSh = graft.operators.Par.widen(batchDocs)
-      .filter(minTokens)
+      .filter(size(TextPipeline.tokens) >= 3)
       .select(col("doc_id").as("new_doc"),
         array_distinct(TextPipeline.shingles(TextPipeline.tokens, 3)).as("sh_new"))
     // partner shingle sets fetched only for candidate partners (bounded
-    // set): from the shingle pile as a partition-pruned point read when
-    // maintained (the production shape), else recomputed from the
-    // documents table via a semi-join (one corpus scan per tick)
-    val oldIds = cand.select(col("old_doc")).distinct()
-    val oldSh = shinglePilePath match {
-      case Some(p) =>
-        val f = Ingest.shingleFetch(spark, p, oldIds)
-        pileFetch = Some(f)
-        f.withColumnRenamed("sh", "sh_old")
-      case None =>
-        graft.operators.Par.widen(docsForConfirm.filter(minTokens)
-          .join(oldIds, col("doc_id") === col("old_doc"), "left_semi"))
-          // repartition AFTER the pruning semi-join, BEFORE the per-row
-          // shingling (r17): the broadcast semi keeps the corpus scan
-          // unshuffled, so the shingle HOF otherwise runs at the scan's
-          // one-file parallelism. Gated on scan splits (r18).
-          .select(col("doc_id").as("old_doc"),
-            array_distinct(TextPipeline.shingles(TextPipeline.tokens, 3)).as("sh_old"))
-    }
+    // set), as a partition-pruned point read of the shingle pile
+    pileFetch = Ingest.shingleFetch(spark, shinglePilePath,
+      cand.select(col("old_doc")).distinct())
+    val oldSh = pileFetch.withColumnRenamed("sh", "sh_old")
     // shuffle_hash, NOT broadcast (the q215 rule): shingle-array sides
     // are batch-/candidate-scale — they grow with the ingest tick, and
     // a static row estimate through agg+explode reads them as tiny at
@@ -214,7 +184,7 @@ object CrawlPipeline {
       .withColumn("near_dup", lit(1L))
 
     // ---- gate 3: duplicated-span fraction (incremental window state)
-    val spans = spanProbe(spark, spanStatePath, batchDocs)
+    val spans = Ingest.dupSpanProbe(spark, spanStatePath, batchDocs)
       .select(col("doc_id"), col("dup_chars"))
 
     // ---- gate 4: Gopher hard filters (per-row map, no shuffle)
@@ -252,7 +222,7 @@ object CrawlPipeline {
     } finally {
       bench.unpersist(blocking = true)
       if (cand != null) cand.unpersist(blocking = true) // lshProbe's candidates
-      pileFetch.foreach(_.unpersist(blocking = true)) // shingleFetch's point-read
+      if (pileFetch != null) pileFetch.unpersist(blocking = true) // shingleFetch's point-read
       bloomBc.foreach(_.unpersist(false))
     }
   }
@@ -269,30 +239,24 @@ object CrawlPipeline {
     * fold keeps a production pile in, and the layout the dup-span
     * probe's folded-generation fast path reads (the un-folded
     * multi-segment read path is contract-covered by `StreamingSpec`/
-    * `SoakSpec`). `ptr` selects the pointer-state ExactSubstr pile
-    * (q259's state form; its fold re-fetches texts from the ingested
-    * corpus). Returns (lshIndexPath, spanStatePath, shinglePilePath). */
+    * `SoakSpec`). Returns (lshIndexPath, spanStatePath,
+    * shinglePilePath). */
   private def pilesFor(s: SparkSession, d: String,
-      ticks: Seq[DataFrame],
-      ptr: Boolean = false,
-      splitTag: String): (String, String, String) = {
+      ticks: Seq[DataFrame], splitTag: String): (String, String, String) = {
     // the tick count AND the caller-supplied splitTag are in the cache
-    // key (ADVICE r16 #3): the count separates two-tick (q258/q259)
-    // from three-tick (q260/q261) histories, and the tag separates two
-    // DIFFERENT same-count partitions of the same dataset
+    // key (ADVICE r16 #3): the count separates two-tick (q258) from
+    // three-tick (q260) histories, and the tag separates two DIFFERENT
+    // same-count partitions of the same dataset
     val work = PileCache.build(s, d, "documents",
-      s"${if (ptr) "ptr" else "text"}#t${ticks.size}#$splitTag", ticks)(
+      s"t${ticks.size}#$splitTag", ticks)(
       (in, work) => {
         Ingest.streamLshIngest(s, in, s"$work/lsh", numHashes = 32, bandSize = 2)
-        if (ptr) Ingest.streamDupSpanMaintainPtr(s, in, s"$work/span")
-        else Ingest.streamDupSpanMaintain(s, in, s"$work/span")
+        Ingest.streamDupSpanMaintain(s, in, s"$work/span")
         Ingest.streamShingleIngest(s, in, s"$work/shingles")
       },
       work => {
         Ingest.compactLshIndex(s, s"$work/lsh")
-        if (ptr) Ingest.compactDupSpanStatePtrFold(s, s"$work/span",
-          ticks.reduce(_ unionByName _))
-        else Ingest.compactDupSpanState(s, s"$work/span")
+        Ingest.compactDupSpanState(s, s"$work/span")
         Ingest.compactShinglePile(s, s"$work/shingles")
       })
     (s"$work/lsh", s"$work/span", s"$work/shingles")
@@ -427,9 +391,8 @@ object CrawlPipeline {
       val (lsh, span, shp) = pilesFor(s, d, Seq(corpus, batch), splitTag = "mod10[<8,>=8]")
       crawlGate(s, batch,
         benchDocs = docsAll.filter(pmod(col("doc_id"), lit(41)) === 0),
-        docsForConfirm = docsAll, lshIndexPath = lsh, spanStatePath = span,
-        arrivedEarlier = (n, o) => pmod(o, lit(10)) < 8 || o < n,
-        shinglePilePath = Some(shp))
+        lshIndexPath = lsh, spanStatePath = span, shinglePilePath = shp,
+        arrivedEarlier = (n, o) => pmod(o, lit(10)) < 8 || o < n)
     }
   }.copy(headline = true, benchWarmup = Some { (s, d) =>
     // Promoted to a benched headliner (r13 VERDICT ask #1). The piles
@@ -442,50 +405,6 @@ object CrawlPipeline {
     val corpus = docsAll.filter(pmod(col("doc_id"), lit(10)) < 8)
     val batch = docsAll.filter(pmod(col("doc_id"), lit(10)) >= 8)
     if (!batch.isEmpty) pilesFor(s, d, Seq(corpus, batch), splitTag = "mod10[<8,>=8]")
-  })
-
-  /** q259: the capstone on the POINTER-state dup-span pile — the same
-    * four gates, the same split convention, and the SAME DuckDB oracle
-    * as q258, with gate 3 probing [[Ingest.dupSpanProbePtr]] against a
-    * [[Ingest.streamDupSpanMaintainPtr]]-maintained and
-    * fold-compacted pile (the state-size side of the r13 trade table:
-    * pointers + probe-time corpus fetch instead of resident window
-    * text). Oracling BOTH state forms against one first-principles SQL
-    * derivation pins the gate's output as invariant across the trade —
-    * both are collision-exact, so a divergence is a bug, not a
-    * parameter choice. The piles are also COMPACTED generations here
-    * (pilesFor folds after the ticks), so the oracle additionally
-    * covers the fold-then-probe read path end-to-end. */
-  val q259CrawlCapstonePtr: QueryDef = QueryDef(
-    "q259_crawl_capstone_ptr",
-    q258CrawlCapstone.oracle.get) { (s, d) =>
-    val docsAll = Tables.documents(s, d)
-    val corpus = docsAll.filter(pmod(col("doc_id"), lit(10)) < 8)
-    val batch = docsAll.filter(pmod(col("doc_id"), lit(10)) >= 8)
-    if (batch.isEmpty) {
-      batch.select(col("doc_id"), lit(0L).as("contaminated"),
-        lit(0L).as("near_dup"), lit(0L).as("dup_span_ppm"),
-        lit(0L).as("gopher_pass"), lit("accepted").as("rejected_by"),
-        lit(1L).as("accepted"))
-    } else {
-      val (lsh, span, shp) = pilesFor(s, d, Seq(corpus, batch), ptr = true, splitTag = "mod10[<8,>=8]")
-      crawlGate(s, batch,
-        benchDocs = docsAll.filter(pmod(col("doc_id"), lit(41)) === 0),
-        docsForConfirm = docsAll, lshIndexPath = lsh, spanStatePath = span,
-        arrivedEarlier = (n, o) => pmod(o, lit(10)) < 8 || o < n,
-        shinglePilePath = Some(shp),
-        spanProbe = (ss, p, b) => Ingest.dupSpanProbePtr(ss, p, docsAll, b))
-    }
-  }.copy(headline = true, benchWarmup = Some { (s, d) =>
-    // Benched headliner (r14 VERDICT ask #1): same untimed prebuilt-
-    // pile discipline as q258 — the timed number is the per-tick gate
-    // against maintained POINTER state, which (by the documented
-    // trade) includes the probe's corpus-fetch pass where q258's
-    // text-resident probe touches only batch + folded state.
-    val docsAll = Tables.documents(s, d)
-    val corpus = docsAll.filter(pmod(col("doc_id"), lit(10)) < 8)
-    val batch = docsAll.filter(pmod(col("doc_id"), lit(10)) >= 8)
-    if (!batch.isEmpty) pilesFor(s, d, Seq(corpus, batch), ptr = true, splitTag = "mod10[<8,>=8]")
   })
 
   /** q260: the capstone's SECOND tick — gate the NEXT arriving batch
@@ -527,47 +446,11 @@ object CrawlPipeline {
       val (lsh, span, shp) = pilesFor(s, d, Seq(corpus, batchA, batchB), splitTag = "mod10[<8,=8,=9]")
       crawlGate(s, batchB,
         benchDocs = docsAll.filter(pmod(col("doc_id"), lit(41)) === 0),
-        docsForConfirm = docsAll, lshIndexPath = lsh, spanStatePath = span,
-        arrivedEarlier = (n, o) => pmod(o, lit(10)) <= 8 || o < n,
-        shinglePilePath = Some(shp))
-    }
-  }
-
-  /** q261: the fourth member of the capstone family, completing the
-    * 2×2 (dup-span state form × tick depth) matrix — q258 text/1-tick,
-    * q259 ptr/1-tick, q260 text/2-tick, q261 PTR/2-tick. Same
-    * predicates and first-principles oracle as q260; gate 3 probes the
-    * POINTER-state pile, built as the same three real micro-batches
-    * and fold-compacted — so the pointer FOLD (the restructured
-    * pre-fold + minority sort-merge text fetch) is oracled over
-    * genuine multi-tick segment history, not just the two-tick split
-    * q259 covers. A text-vs-ptr divergence at either tick depth is a
-    * bug by construction (both state forms are collision-exact). */
-  val q261CrawlCapstoneTick2Ptr: QueryDef = QueryDef(
-    "q261_crawl_capstone_tick2_ptr",
-    q260CrawlCapstoneTick2.oracle.get) { (s, d) =>
-    val docsAll = Tables.documents(s, d)
-    val corpus = docsAll.filter(pmod(col("doc_id"), lit(10)) < 8)
-    val batchB = docsAll.filter(pmod(col("doc_id"), lit(10)) === 9)
-    if (batchB.isEmpty) {
-      batchB.select(col("doc_id"), lit(0L).as("contaminated"),
-        lit(0L).as("near_dup"), lit(0L).as("dup_span_ppm"),
-        lit(0L).as("gopher_pass"), lit("accepted").as("rejected_by"),
-        lit(1L).as("accepted"))
-    } else {
-      val batchA = docsAll.filter(pmod(col("doc_id"), lit(10)) === 8)
-      val (lsh, span, shp) =
-        pilesFor(s, d, Seq(corpus, batchA, batchB), ptr = true, splitTag = "mod10[<8,=8,=9]")
-      crawlGate(s, batchB,
-        benchDocs = docsAll.filter(pmod(col("doc_id"), lit(41)) === 0),
-        docsForConfirm = docsAll, lshIndexPath = lsh, spanStatePath = span,
-        arrivedEarlier = (n, o) => pmod(o, lit(10)) <= 8 || o < n,
-        shinglePilePath = Some(shp),
-        spanProbe = (ss, p, b) => Ingest.dupSpanProbePtr(ss, p, docsAll, b))
+        lshIndexPath = lsh, spanStatePath = span, shinglePilePath = shp,
+        arrivedEarlier = (n, o) => pmod(o, lit(10)) <= 8 || o < n)
     }
   }
 
   val all: Seq[QueryDef] =
-    Seq(q258CrawlCapstone, q259CrawlCapstonePtr, q260CrawlCapstoneTick2,
-      q261CrawlCapstoneTick2Ptr)
+    Seq(q258CrawlCapstone, q260CrawlCapstoneTick2)
 }

@@ -270,11 +270,6 @@ object Ingest {
       compaction = Fold((spark, path) => rows => dupSpanCounts(
           rows.repartition(foldPartitions(spark, path), col("hk"), col("g"))),
         stamped = true))
-    /** Pointer-state window counts: per-(batch, text) rows cannot fold
-      * without the text, so auto-compaction rewrites; the true fold is
-      * [[compactDupSpanStatePtrFold]]. */
-    val dupSpanPtr: SegmentPile[Column => Column] = SegmentPile(
-      hashOf => batch => TextPipeline.dupSpanPartialPtr(batch, hashOf))
     /** The events rollup's mergeable partial states. */
     val aggMv: SegmentPile[Unit] = SegmentPile(_ => aggPartial,
       compaction = Fold((_, _) => aggViewOf),
@@ -462,7 +457,7 @@ object Ingest {
     * pile's stored vectors are re-assigned to `newCent` and the pile
     * atomically replaced — the ONLY legal way a pile's quantizer can
     * change, since ingest refuses mixed quantizers. One corpus-pass
-    * background job by design (like the ptr fold).
+    * background job by design.
     *
     * Crash-safe at every point, leaning on the probe's fingerprint
     * verification as the fail-safe:
@@ -980,13 +975,12 @@ object Ingest {
     * (new_doc, old_doc) near-dup candidates without ever re-banding
     * the corpus — the q230 asymmetric new-vs-corpus shape on top of
     * the incremental index. Self-pairs are excluded so an
-    * already-ingested document never pairs with itself; buckets larger
-    * than
-    * `maxBucket` on the index side are skipped as degenerate
-    * (boilerplate skew, the q61 cap discipline — bounds join fan-out
-    * at cap per probe row regardless of index skew). */
-  def lshProbe(spark: SparkSession, indexPath: String, batchDocs: DataFrame,
-      maxBucket: Int = 32, refuseDegenerate: Boolean = false): DataFrame = {
+    * already-ingested document never pairs with itself. A touched
+    * index-side bucket with more than [[LshMaxBucket]] members is
+    * refused with an IOException: join fan-out stays bounded at the
+    * cap per probe row, and no candidate is ever silently dropped. */
+  def lshProbe(spark: SparkSession, indexPath: String,
+      batchDocs: DataFrame): DataFrame = {
     // first-boot ordering: probing a never-created (or created-but-
     // data-less) index is an empty result, not an AnalysisException
     val pile = readPile(spark, indexPath) match {
@@ -1026,36 +1020,27 @@ object Ingest {
         .groupBy(col("band"), col("bbucket"), col("bucket"))
         .agg(collect_list(col("doc_id")).as("old_ids"))
       // The degenerate-bucket cap bounds join fan-out under boilerplate
-      // skew (the q61 discipline) at the price of RECALL: members of a
-      // dropped bucket never reach any downstream confirm step. Callers
-      // whose contract is exactness (the crawl capstone's oracle-verified
-      // gate) set refuseDegenerate — a touched over-cap bucket then
-      // raises loudly instead of silently under-matching, telling the
-      // operator to raise the cap or accept the approximation. The guard
-      // is FUSED into the probe join (r14 VERDICT ask #2/#3: one action
-      // per probe, no separate per-tick count() pass over the touched
-      // partitions): an over-cap group poisons its old_ids with
-      // raise_error, which fires when the join's single materializing
-      // action evaluates the group — the error is unwrapped below into
-      // the same prescriptive IOException the separate-pass check threw.
-      val idx =
-        if (refuseDegenerate) {
-          val msg = concat(
-            lit(s"$OverCapMarker="),
-            lit(s"$maxBucket in $indexPath (a touched (band, bucket) group of "),
-            size(col("old_ids")).cast("string"),
-            lit(" members) — raise the cap (exactness contract) or probe " +
-              "with refuseDegenerate=false (bounded, approximate)"))
-          // cast the raise_error branch to old_ids' ACTUAL element type
-          // (ADVICE r15 #4): a hardcoded array<bigint> would widen the
-          // when/otherwise coercion if the indexed doc_id were ever
-          // non-bigint, pushing an implicit coercion onto downstream
-          // old_doc comparisons
-          grouped.withColumn("old_ids",
-            when(size(col("old_ids")) > maxBucket,
-              raise_error(msg).cast(grouped.schema("old_ids").dataType))
-              .otherwise(col("old_ids")))
-        } else grouped.filter(size(col("old_ids")) <= maxBucket)
+      // skew (the q61 discipline). Dropping an over-cap bucket would
+      // cost RECALL — its members would never reach the confirm step —
+      // so a touched over-cap bucket raises loudly instead. The guard
+      // is FUSED into the probe join (one action per probe, no separate
+      // per-tick count() pass over the touched partitions): an over-cap
+      // group poisons its old_ids with raise_error, which fires when the
+      // join's single materializing action evaluates the group — the
+      // error is unwrapped below into a prescriptive IOException.
+      val msg = concat(
+        lit(s"$OverCapMarker="),
+        lit(s"$LshMaxBucket in $indexPath (a touched (band, bucket) group of "),
+        size(col("old_ids")).cast("string"),
+        lit(" members) — the index holds a degenerate (boilerplate) bucket"))
+      // cast the raise_error branch to old_ids' ACTUAL element type: a
+      // hardcoded array<bigint> would widen the when/otherwise coercion
+      // if the indexed doc_id were ever non-bigint, pushing an implicit
+      // coercion onto downstream old_doc comparisons
+      val idx = grouped.withColumn("old_ids",
+        when(size(col("old_ids")) > LshMaxBucket,
+          raise_error(msg).cast(grouped.schema("old_ids").dataType))
+          .otherwise(col("old_ids")))
       // shuffle_hash, NOT broadcast (the q215 rule): the probe side is
       // batch × nBands banding rows (grows with the ingest tick) and the
       // pruned index side is still a corpus FRACTION (touched/total
@@ -1074,8 +1059,7 @@ object Ingest {
       catch { case scala.util.control.NonFatal(t) =>
         // the fused guard surfaces as a task-level SparkRuntimeException
         // wrapped by the job failure — re-raise it as the documented
-        // prescriptive refusal (API contract unchanged vs the old
-        // separate-pass check). The walk is BOUNDED (ADVICE r15 #3:
+        // prescriptive refusal. The walk is BOUNDED (ADVICE r15 #3:
         // self-referential cause chains are legal and do occur in
         // wrapped executor exceptions — an unbounded takeWhile would
         // hang the error path) and matches the raise_error class/
@@ -1094,6 +1078,10 @@ object Ingest {
     * the probe's materializer unwraps it from the task failure into the
     * prescriptive IOException refusal. */
   private val OverCapMarker = "touched group(s) exceed maxBucket"
+
+  /** [[lshProbe]]'s degenerate-bucket cap: the most index-side members
+    * one touched (band, bucket) group may hold. */
+  val LshMaxBucket = 256
 
   /** Extract the prescriptive over-cap text from one cause-chain link.
     * Primary match is the marker in the message (we control the
@@ -1202,9 +1190,7 @@ object Ingest {
     * cost per batch is O(batch chars), never O(corpus); nothing
     * existing is rewritten. The same asymptotic unit as the paper's
     * suffix array (one entry per char), stored as mergeable aggregate
-    * state instead of a monolithic index. See
-    * [[streamDupSpanMaintainPtr]] for the pointer-state variant that
-    * trades the stored text for probe-time corpus fetches. */
+    * state instead of a monolithic index. */
   def streamDupSpanMaintain(spark: SparkSession, inputDir: String,
       statePath: String,
       hashOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
@@ -1256,10 +1242,10 @@ object Ingest {
       case Some(pile) if pile.folded =>
         // the pile is a single FOLD-compacTED generation (seg=-1 only
         // AND carrying the compactor's `_folded` stamp — ADVICE r14 #2:
-        // seg-emptiness alone is NOT fold-shaped evidence, exactly as
-        // the pointer probe learned when a rewrite-form generation kept
-        // split c=1+c=1 rows): the fold's groupBy left exactly one row
-        // per (hk, g) with the summed count, so the probe-side re-group
+        // seg-emptiness alone is NOT fold-shaped evidence: a rewrite-
+        // form generation keeps split c=1+c=1 rows): the fold's groupBy
+        // left exactly one row per (hk, g) with the summed count, so the
+        // probe-side re-group
         // is a wasted corpus-scale shuffle — filter and project
         // instead. This is the steady-state production read: piles
         // fold on the compaction policy, so most ticks probe a folded
@@ -1273,206 +1259,6 @@ object Ingest {
       .join(dup.hint("shuffle_hash"), Seq("hk", "g"))
       .select(col("doc_id"), col("i"), (col("i") + 49).as("e"))
     graft.operators.TextPipeline.mergeSpans(hits)
-  }
-
-  // ---------------------------------------------------------------
-  // Pointer-state ExactSubstr variant (the documented scale-out trade
-  // of the text-resident state above, r13): the per-batch partial
-  // keeps one row per distinct in-batch window TEXT but stores a
-  // representative OCCURRENCE pointer (min (doc_id, i)) instead of
-  // the 50-char text — 28 bytes per distinct window vs ~66. The
-  // probe's exact-confirm then re-fetches each candidate's window
-  // text FROM THE CORPUS TABLE (substring at the pointer) and
-  // compares — still collision-exact, at the price of one corpus-
-  // table pass per probe tick (shuffled on doc_id), where the
-  // text-state probe touches nothing but the batch and the folded
-  // state. Pick per deployment: state bytes (this variant) vs
-  // probe-time corpus IO (the default). Distinct texts colliding on
-  // hk remain separate state ROWS (the partial grouped on (hk, g)
-  // before dropping g), so counts never pool across a collision.
-
-  /** Pointer-state maintenance ([[Piles.dupSpanPtr]]); the true
-    * delta-merge fold is [[compactDupSpanStatePtrFold]], which
-    * re-fetches texts from the corpus (an offline job by design). */
-  def streamDupSpanMaintainPtr(spark: SparkSession, inputDir: String,
-      statePath: String,
-      hashOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        xxhash64(_),
-      autoCompactSegments: Int = SegmentCompactionPolicy.DefaultMaxSegments): Unit =
-    ingestPile(spark, Piles.dupSpanPtr, hashOf, inputDir, statePath, autoCompactSegments)
-
-  /** Pointer-state dedup-at-ingest probe — semantics identical to
-    * [[dupSpanProbe]] (collision-EXACT maximal dup spans of the batch
-    * vs everything ingested), mechanics per the trade above: candidate
-    * (batch window × state row) pairs meet on the 8-byte hash, each
-    * candidate's representative text is fetched from `corpusDocs`
-    * (substring at the stored pointer) and compared to the batch
-    * window's text, and a window is duplicated iff its CONFIRMED
-    * occurrence count reaches 2. `corpusDocs` must be the ingested
-    * corpus (batch included) — the pointers index into it. */
-  def dupSpanProbePtr(spark: SparkSession, statePath: String,
-      corpusDocs: DataFrame, batchDocs: DataFrame,
-      hashOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        xxhash64(_)): DataFrame = {
-    val pile = readPile(spark, statePath) match {
-      case Some(p) => p
-      case None => return graft.operators.TextPipeline.mergeSpans(spark.range(0)
-        .select(col("id").as("doc_id"), col("id").as("i"), col("id").as("e")))
-    }
-    // A FOLD-compacted pile has exactly one row per distinct corpus
-    // window, so a c = 1 row can never reach the >= 2 confirmed
-    // total — filter it out BEFORE the join. This is the same 20×
-    // candidate reduction the text-state probe gets from dupHashView's
-    // c >= 2 filter, and it is what makes the hash build side bounded
-    // at scale: the r14 100× audit run failed this join building a
-    // hash relation over the full 192M-row state (~170 MB per task at
-    // 32 partitions); the folded filter drops it to the 9.1M-row dup
-    // set. The filter is sound ONLY after the FOLD compactor — the
-    // REWRITE compactor also leaves one seg=-1 generation but keeps
-    // per-batch partial rows (the same window's count may sit as
-    // c=1 + c=1 across former segments; StreamingSpec caught exactly
-    // this under-match) — so the fold stamps a `_folded` marker into
-    // its generation (underscore-prefixed: invisible to the parquet
-    // reader, rides the atomic promote) and the probe trusts only it.
-    // Non-folded state joins sort-merge — spill-safe at any state
-    // size — and is the policy-bounded transient shape anyway (a probe
-    // at scale runs against a folded generation).
-    val folded = pile.folded
-    val raw = pile.rows.select(col("hk"), col("o_doc"), col("o_i"), col("c"))
-    val st = if (folded) raw.filter(col("c") >= 2) else raw
-    // Batch windows as KEYS only (r18, r17 VERDICT ask #4; guide §2.3
-    // "shuffle keys and metadata instead of payloads"): the r17 shape
-    // carried each batch window's 50-char text `g` through the hk
-    // exchange AND the o_doc exchange — ~50 bytes per batch CHARACTER
-    // on the wire, twice. The key stream is (doc_id, i, hk) = 24 B/char
-    // and both window texts are re-derived for the CANDIDATE subset
-    // only, each from one documents-table join.
-    val w = graft.operators.TextPipeline.charWindowKeys(batchDocs, hashOf)
-    // corpus-derived sides: never broadcast (q215 rule) — candidates
-    // meet on the hash, then the text fetches below confirm
-    val cand = w.join(st.hint(if (folded) "shuffle_hash" else "merge"), "hk")
-    // ONE corpus-text exchange: each candidate fetches its
-    // representative's window at the stored pointer; o_text is
-    // projected away in the same stage so only the 50-char window
-    // survives the join
-    val withOld = cand
-      .join(corpusDocs.select(col("doc_id").as("o_doc"),
-          col("text").as("o_text")).hint("shuffle_hash"), "o_doc")
-      .select(col("doc_id"), col("i"), col("c"),
-        expr("substring(o_text, o_i, 50)").as("o_win"))
-    // one BATCH-text exchange (batch ⊆ corpus — the strictly smaller
-    // side) re-derives the candidate's own window; keyed on doc_id, the
-    // SAME clustering the confirm groupBy needs, so the aggregation
-    // below reuses this exchange instead of adding its own
-    val confirmed = withOld
-      .join(batchDocs.select(col("doc_id"), col("text")).hint("shuffle_hash"),
-        "doc_id")
-      .filter(expr("substring(text, i, 50)") === col("o_win"))
-    val hits = confirmed.groupBy(col("doc_id"), col("i"))
-      .agg(sum(col("c")).cast("long").as("tot"))
-      .filter(col("tot") >= 2)
-      .select(col("doc_id"), col("i"), (col("i") + 49).as("e"))
-    graft.operators.TextPipeline.mergeSpans(hits)
-  }
-
-  /** Compact the pointer-state dup-span pile: rewrite, without
-    * folding (per-(batch, text) rows cannot merge text-free). */
-  def compactDupSpanStatePtr(spark: SparkSession, statePath: String): Unit =
-    compactPile(spark, Piles.dupSpanPtr, statePath)
-
-  /** Fold-form compaction for the pointer pile — the true delta-merge:
-    * collapses the per-batch partial rows to one row per distinct
-    * corpus window (exactly the text-state fold's cardinality), keeping
-    * the global-minimum representative pointer with the summed count.
-    *
-    * Restructured per r14 VERDICT observation #1 / ask #2: the r14
-    * shape joined corpus TEXT onto EVERY state row and shuffled the
-    * full widened set to the group — at 100× that exchange carried all
-    * 192M rows with their 50-char texts (89.9 s, +35% over the text
-    * fold). The fold now runs state-only first and fetches text only
-    * where text can matter:
-    *
-    *  1. pre-fold state-only on the full pointer identity — (o_doc,
-    *     o_i) DETERMINES the window text (substring at the pointer),
-    *     so rows sharing (hk, o_doc, o_i) are the same window and
-    *     merge text-free. One size-derived exchange on hk alone: hash-
-    *     partitioning on hk satisfies the (hk, o_doc, o_i) grouping
-    *     (same triple ⇒ same hk partition) AND the per-hk window
-    *     below, so the whole phase is a single pile-scale shuffle of
-    *     NARROW (28-byte) rows.
-    *  2. split on per-hk row multiplicity (window count over hk — no
-    *     new exchange): a singleton-hk row is already one-row-per-
-    *     window (no other row can be the same window text, because the
-    *     same text implies the same hk) and passes through UNCHANGED —
-    *     the overwhelming majority (~95% of distinct windows at the
-    *     r14 100× measurement).
-    *  3. only multi-row hk groups — true duplicates needing a count
-    *     merge, plus 64-bit collisions needing disambiguation (the
-    *     dup-set-scale minority, 192M → ~9M at 100×) — fetch their
-    *     representatives' texts from the corpus, re-group on (hk,
-    *     text), min-rep + summed count. The fetch is a SORT-MERGE join
-    *     (ADVICE r14 #4: the r14 shuffle_hash built a per-task hash
-    *     over the FULL (doc_id, text) corpus at the config-default
-    *     partition count — the same fixed-partition memory failure
-    *     mode the r14 fix removed from the fold shuffle; sort-merge
-    *     spills at any corpus size and this is an offline background
-    *     job where bounded memory wins).
-    *
-    * The pre-fold is staged to a parquet dir inside the temp pile (two
-    * consumers — pass-through and fetch — must not recompute the
-    * pile-scale phase twice) and deleted before writeTmp returns, so
-    * no promoted generation ever contains it: a crash while it exists
-    * is a crash inside writeTmp, whose whole tmp dir recovery discards
-    * ("live-intact"); the promoted-tmp recovery path only ever sees a
-    * completed writeTmp. The name is deliberately NOT dot/underscore-
-    * prefixed: Spark 4.1 still reads an explicitly-passed hidden dir
-    * but logs "All paths were ignored" while doing it — semantics a
-    * future reader could tighten into an EMPTY read, which would
-    * silently write an empty folded pile. */
-  def compactDupSpanStatePtrFold(spark: SparkSession, statePath: String,
-      corpusDocs: DataFrame): Unit = readPile(spark, statePath).foreach { pile =>
-    requireCheckpointCaughtUp(spark, statePath, pile.segments)
-    promoteCompacted(spark, statePath, Nil) { tmp =>
-      val staging = s"$tmp/prefold-staging"
-      pile.rows
-        .repartition(foldPartitions(spark, statePath), col("hk"))
-        .groupBy(col("hk"), col("o_doc"), col("o_i"))
-        .agg(sum(col("c")).cast("long").as("c"))
-        .withColumn("nhk",
-          count(lit(1)).over(Window.partitionBy(col("hk"))))
-        .write.mode("overwrite").parquet(staging)
-      val pre = spark.read.parquet(staging)
-      pre.filter(col("nhk") === 1)
-        .select(col("hk"), col("o_doc"), col("o_i"), col("c"))
-        .write.mode("overwrite").parquet(compactedSeg(tmp))
-      pre.filter(col("nhk") > 1)
-        .select(col("hk"), col("o_doc"), col("o_i"), col("c"))
-        .join(corpusDocs.select(col("doc_id").as("o_doc"),
-            col("text").as("o_text")).hint("merge"), "o_doc")
-        .withColumn("g", expr("substring(o_text, o_i, 50)"))
-        .groupBy(col("hk"), col("g"))
-        .agg(sum(col("c")).cast("long").as("c"),
-          min(struct(col("o_doc"), col("o_i"))).as("rep"))
-        .select(col("hk"), col("rep.o_doc").as("o_doc"),
-          col("rep.o_i").as("o_i"), col("c"))
-        .write.mode("append").parquet(compactedSeg(tmp))
-      // the staging delete must be VERIFIED (ADVICE r15 #2): if it
-      // silently fails, the staging dir rides the atomic promote into
-      // the live pile root and every subsequent read of the pile fails
-      // partition discovery (seg=-1 vs prefold-staging conflict).
-      // Throwing here discards the whole tmp generation (writeTmp
-      // fails → promote never happens) and the live pile stays intact.
-      val sp = new org.apache.hadoop.fs.Path(staging)
-      val sfs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!sfs.delete(sp, true) && sfs.exists(sp))
-        throw new java.io.IOException(
-          s"compactDupSpanStatePtrFold: failed to delete prefold staging $staging; " +
-            "discarding the tmp generation (a promoted generation must " +
-            "contain only its seg=-1 output)")
-      // the probe's c >= 2 pre-filter is sound only on fold-shaped
-      // output (one row per distinct window) — stamp the generation
-      stampFolded(spark, compactedSeg(tmp))
-    }
   }
 
   /** Read-side merge of postings segments: per term, concatenate the

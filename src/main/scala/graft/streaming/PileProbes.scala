@@ -9,7 +9,7 @@ import graft.sources.Tables
   * contract tests — the inverted-postings index and the aggregate MV —
   * plus the IVF quantizer-rotation path and BM25-at-ingest. With
   * these, EVERY incremental index surface answers a hash-oracled query
-  * through its maintained pile (LSH/span/shingle via the q258–q261
+  * through its maintained pile (LSH/span/shingle via the q258/q260
   * capstones and q230, IVF via q262/q263, postings via q264, agg MV
   * via q265, rotation via q266, ranked retrieval via q267): a probe
   * diverging from the batch semantics is a maintenance bug caught by

@@ -65,35 +65,18 @@ class BroadcastAuditSpec extends SparkTestBase {
     "q248_mutual_info", "q249_psi_drift", "q251_burstiness",
     "q252_salted_skew_join",
     // r13 crawl capstone: the batch-scale sides (gate tables, shingle
-    // arrays) carry shuffle_hash hints; the two flags that REMAIN are
-    // bounded by construction — the benchmark-gram side of the
-    // decontamination confirm (the q212 reviewed reasoning) and the
-    // candidate-partner id set of the oldSh semi-join (≤ batch × cap
-    // rows, and broadcasting it is exactly what keeps the CORPUS side
-    // of that semi-join from shuffling)
+    // arrays, the shingle-pile fetch) carry shuffle_hash hints; the
+    // flag that REMAINS is bounded by construction — the benchmark-gram
+    // side of the decontamination confirm ("documents via
+    // agg+explode": the doc_id % 41 = 0 benchmark sample's 8-gram set,
+    // the q212 reviewed reasoning), bounded by the benchmark's size,
+    // not a corpus-growth set
     "q258_crawl_capstone",
-    // r14 pointer-state capstone: same gate, same remaining flag — the
-    // benchmark-gram side of the decontamination confirm ("documents
-    // via agg+explode": docs %41 → 8-gram explode → distinct), bounded
-    // by the benchmark set's size exactly as reviewed for q212/q258;
-    // the ptr span probe's corpus fetch and the shingle-pile fetch are
-    // shuffle_hash-hinted. Executed clean at 100× (r14 audit run,
-    // docs/BENCH_NOTES.md).
-    "q259_crawl_capstone_ptr",
     // r15 tick-2 capstone: the SAME crawlGate with tick-order
     // precedence (r16: over its own three-micro-batch piles) — its
-    // plan carries the same reviewed bounded flags (benchmark-gram
-    // side of the decontamination confirm; candidate-partner id set),
-    // nothing new to review
+    // plan carries q258's reviewed benchmark-gram flag, nothing new
+    // to review
     "q260_crawl_capstone_tick2",
-    // r16 tick-2 pointer-state capstone: q260's gate assembly + q259's
-    // ptr span probe — the single remaining flag is the same reviewed
-    // benchmark-gram broadcast ("documents via agg+explode": the
-    // doc_id % 41 = 0 benchmark sample's 8-gram set, bounded by the
-    // benchmark's size, NOT a corpus-growth set); executed clean at
-    // 100× with exactly that one flag (r16 audit run,
-    // docs/BENCH_NOTES.md "r16 100× execute")
-    "q261_crawl_capstone_tick2_ptr",
     // r17 incremental-IVF probe (q58's reviewed "bounded query sets"
     // class, BENCH_NOTES "r17 BroadcastAudit flag-diff"): the flagged
     // "embeddings via window+join" broadcast sides are (a) the

@@ -45,6 +45,11 @@ class EngineSpec extends SparkTestBase {
     assert(bare.sql("SELECT nfc_normalize('Cafe\u0301')").head().getString(0) === "Café")
   }
 
+  test("every query Plans dumps beside the headliners is a query") {
+    val names = SparkEntry.defs.map(_.name).toSet
+    assert(Plans.extra.filterNot(names) === Set.empty[String])
+  }
+
   test("execution summaries analog: observed metrics report per-stage counts") {
     // ≙ the reference streaming per-executor execution summaries back
     // to TiDB (`dbms/src/Flash/Statistics/ExecutionSummaryCollector.h`)

@@ -86,10 +86,6 @@ class SegmentPileSpec extends SparkTestBase {
       p => Ingest.compactDupSpanState(spark, p),
       p => rows(Ingest.dupHashView(p)),
       folded = true),
-    Family("dup-span-ptr", () => docs, "doc_id",
-      (in, p) => Ingest.streamDupSpanMaintainPtr(spark, in, p),
-      p => Ingest.compactDupSpanStatePtr(spark, p),
-      p => rows(p.select(col("hk"), col("o_doc"), col("o_i"), col("c")))),
     Family("agg-mv", () => events, "event_id",
       (in, p) => Ingest.streamAggMaintain(spark, in, p),
       p => Ingest.compactAggState(spark, p),
