@@ -50,8 +50,12 @@ object CacheHygiene {
 
   /** `df` persisted and materialized — the small result a probe hands
     * back for the harness to sweep. If materializing fails, the cache
-    * is released before the failure propagates. */
+    * is released before the failure propagates. An older entry for the
+    * same plan is dropped first: Spark matches a file scan by its root
+    * path, so a probe of a pile that has since gained or compacted
+    * segments would otherwise be served the earlier probe's rows. */
   def materialized(df: DataFrame): DataFrame = {
+    df.unpersist(blocking = true)
     val out = df.persist()
     var done = false
     try { out.count(); done = true; out }

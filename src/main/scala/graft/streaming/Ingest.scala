@@ -155,11 +155,15 @@ object Ingest {
   // keeping every table in one DeltaTree segment structure,
   // `DeltaMergeStore`). A pile is a directory of immutable per-batch
   // segments `seg=<batchId>` and, once compacted, one `seg=-1`
-  // generation; identity markers in its root record the parameters
-  // every ingest, compaction and probe must agree on. Families differ
-  // only in their [[SegmentPile]] value ([[Piles]]); ingest
-  // ([[ingestPile]]), compaction ([[compactPile]] through
-  // [[promoteCompacted]]) and marker handling are shared.
+  // generation. Everything else a pile needs lives in the same root
+  // under an underscore-prefixed name no parquet read lists: the
+  // identity markers every ingest, compaction and probe must agree on,
+  // and IVF's `_quantizer`. The root is the unit [[promoteCompacted]]
+  // replaces, so one promote and one recovery ([[recoverCompaction]])
+  // cover every file of a pile. Families differ only in their
+  // [[SegmentPile]] value ([[Piles]]); ingest ([[ingestPile]]),
+  // compaction ([[compactPile]] through [[promoteCompacted]]) and
+  // marker handling are shared.
 
   /** An identity marker: the file `name` in a pile's root, written
     * before the first segment commits and carried into every compacted
@@ -198,7 +202,7 @@ object Ingest {
     * of every segment and generation, the identity markers and their
     * values, the compaction form, the stream-side `prep`, and an
     * `artifact` step that runs after the markers are verified and
-    * before they are written (IVF's centroid sibling). */
+    * before they are written (IVF's `_quantizer`). */
   final case class SegmentPile[I](
       segment: I => DataFrame => DataFrame,
       partitionCols: Seq[String] = Nil,
@@ -219,14 +223,14 @@ object Ingest {
       df.withColumn("tbucket", bucketOf(col("term"), b))
 
     /** IVF assignments to a fixed centroid set, per inverted list. The
-      * centroids persist beside the pile, before its marker. */
+      * centroids persist in the pile's `_quantizer`, before its marker. */
     val ivf: SegmentPile[DataFrame] = SegmentPile(
       cent => batch => Similarity.ivfAssign(batch, cent), Seq("cid"),
       Seq(Marker.Centroids -> ((cent: DataFrame) => centroidFingerprint(cent))),
       artifact = (spark, path, cent) => {
-        val sib = new org.apache.hadoop.fs.Path(centroidSiblingPath(path))
-        if (!sib.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(sib))
-          cent.write.mode("overwrite").parquet(sib.toString)
+        val q = new org.apache.hadoop.fs.Path(quantizerPath(path))
+        if (!q.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(q))
+          cent.write.mode("overwrite").parquet(q.toString)
       })
     /** Boolean postings (term → sorted doc list, df); the fold merges
       * the per-segment lists term by term. */
@@ -298,13 +302,13 @@ object Ingest {
 
   /** Compact the pile at `path` into one generation in its family's
     * form; a pile with no data has nothing to compact. The live markers
-    * are read (or the compaction refused) and ride the new generation
-    * through [[promoteCompacted]]. */
+    * are checked (a missing or corrupt one refuses the compaction) and
+    * ride the new generation through [[promoteCompacted]]. */
   private def compactPile(spark: SparkSession, pile: SegmentPile[_], path: String): Unit =
     readPile(spark, path).foreach { read =>
-      val live = pile.markers.map { case (m, _) => m -> liveMarker(spark, path, m) }
+      pile.markers.foreach { case (m, _) => liveMarker(spark, path, m) }
       requireCheckpointCaughtUp(spark, path, read.segments)
-      promoteCompacted(spark, path, live) { tmp =>
+      promoteCompacted(spark, path) { tmp =>
         pile.compaction match {
           case Rewrite =>
             val cols = pile.partitionCols.map(col)
@@ -331,11 +335,12 @@ object Ingest {
   // `_buckets`/`_banding` are the hash piles': assigning against
   // different centroids computes incomparable list ids and silently
   // drops matches. The centroids (k ≈ √N rows, broadcast-bounded by the
-  // q58 sizing rule) persist as a parquet sibling `<indexPath>-centroids`
-  // outside the promoted root, and their SHA-256 fingerprint is the
-  // `_centroids` marker; ingest and probe verify sibling against marker
-  // before trusting either. Re-clustering for centroid drift is the
-  // offline rebuild [[rebuildIvfIndex]].
+  // q58 sizing rule) persist as parquet in the pile's own root, under
+  // `_quantizer`, and their SHA-256 fingerprint is the `_centroids`
+  // marker; both ride every promoted generation, and every probe
+  // verifies quantizer against marker before trusting either.
+  // Re-clustering for centroid drift is the offline rebuild
+  // [[rebuildIvfIndex]], an ordinary promote.
 
   /** Order-independent fingerprint of a centroid set: SHA-256 over the
     * sorted (cid, exact float bits) rows. The collect is k rows — the
@@ -354,25 +359,32 @@ object Ingest {
         .digest(parts.mkString("\n").getBytes("UTF-8")))
   }
 
-  private def centroidSiblingPath(path: String) = s"$path-centroids"
+  private def quantizerPath(path: String) = s"$path/_quantizer"
 
-  /** Read the pile's trained centroid set from its sibling, verifying
-    * it against the in-pile `_centroids` fingerprint first — the
-    * sibling lives outside the atomically-promoted root, so trusting
-    * it unverified would let a swapped/corrupted artifact silently
+  /** The quantizer of the pile at `path`, read from its part files:
+    * given the `_quantizer` directory itself, Spark reads it but warns
+    * that the underscore path is ignored. */
+  private def readQuantizer(spark: SparkSession, path: String): DataFrame = {
+    val q = new org.apache.hadoop.fs.Path(quantizerPath(path))
+    spark.read.parquet(q.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(q).map(_.getPath.toString).filter(_.endsWith(".parquet")).toSeq: _*)
+  }
+
+  /** Read the pile's trained centroid set from its `_quantizer`,
+    * verifying it against the `_centroids` fingerprint first: trusting
+    * a swapped or corrupted quantizer unverified would silently
     * re-route every probe. */
   def readIvfCentroids(spark: SparkSession, indexPath: String): DataFrame = {
     val stored = liveMarker(spark, indexPath, Marker.Centroids)
-    val sib = centroidSiblingPath(indexPath)
-    val sibP = new org.apache.hadoop.fs.Path(sib)
-    if (!sibP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(sibP))
+    val q = new org.apache.hadoop.fs.Path(quantizerPath(indexPath))
+    if (!q.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(q))
       throw new java.io.IOException(
         s"IVF index at $indexPath is marked with centroid fingerprint $stored " +
-          s"but its centroid sibling $sib is missing; restore it or rebuild")
-    val cent = spark.read.parquet(sib)
+          s"but its quantizer $q is missing; restore it or rebuild")
+    val cent = readQuantizer(spark, indexPath)
     val fp = centroidFingerprint(cent)
     if (fp != stored) throw new java.io.IOException(
-      s"centroid sibling $sib (fingerprint $fp) does not match the pile's " +
+      s"quantizer $q (fingerprint $fp) does not match the pile's " +
         s"_centroids marker ($stored); refusing to probe against a swapped " +
         "quantizer — restore the original centroids or rebuild the index")
     cent
@@ -399,7 +411,7 @@ object Ingest {
 
   /** ANN probe against the maintained IVF pile — the production read:
     * per query, the nProbe nearest centroids (an O(|Q| × k) broadcast
-    * pass over the verified sibling centroid set) select the inverted
+    * pass over the verified `_quantizer`) select the inverted
     * lists to scan; the pile read partition-prunes to exactly those
     * cid partitions; candidates rank by exact cosine distance for the
     * final top-k. Semantics ≡ [[graft.operators.Similarity.ivfSearch]]
@@ -459,66 +471,27 @@ object Ingest {
     * change, since ingest refuses mixed quantizers. One corpus-pass
     * background job by design.
     *
-    * Crash-safe at every point, leaning on the probe's fingerprint
-    * verification as the fail-safe:
-    *  1. the new centroid artifact is STAGED at `<sibling>.next`
-    *     (live sibling untouched — aborting here leaves benign
-    *     garbage a later rebuild overwrites);
-    *  2. [[promoteCompacted]] writes the re-assigned generation WITH
-    *     the new `_centroids` fingerprint and promotes atomically;
-    *  3. the staged sibling replaces the live one (delete + rename).
-    * A crash inside step 3 leaves marker(new) ≠ sibling(old/absent):
-    * every probe and ingest REFUSES loudly (never silently
-    * mis-assigns), and [[recoverIvfRebuild]] finishes the swap
-    * mechanically. */
+    * An ordinary [[promoteCompacted]]: the temp root receives the
+    * re-assigned generation, the new `_quantizer` and its `_centroids`
+    * fingerprint, and one promote makes all three live at once. The
+    * fingerprint and the assignment are taken from the quantizer as
+    * written, so the three agree even if `newCent` is not
+    * deterministic. A crash anywhere recovers through
+    * [[recoverCompaction]]: one before the promote's renames leaves
+    * the old pile live, one between them promotes the new one. */
   def rebuildIvfIndex(spark: SparkSession, indexPath: String,
       newCent: DataFrame): Unit = {
-    val fp = centroidFingerprint(newCent)
     val pile = readPile(spark, indexPath).getOrElse(throw new java.io.IOException(
       s"rebuildIvfIndex: pile $indexPath holds no vectors to re-assign"))
     requireCheckpointCaughtUp(spark, indexPath, pile.segments)
-    val sib = new org.apache.hadoop.fs.Path(centroidSiblingPath(indexPath))
-    val next = new org.apache.hadoop.fs.Path(centroidSiblingPath(indexPath) + ".next")
-    val fs = sib.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    newCent.write.mode("overwrite").parquet(next.toString)
-    promoteCompacted(spark, indexPath, Seq(Marker.Centroids -> fp)) { tmp =>
-      graft.operators.Similarity.ivfAssign(
-          pile.rows.select(col("vec_id"), col("embedding")), newCent)
-        .write.mode("overwrite").partitionBy("cid").parquet(compactedSeg(tmp))
+    promoteCompacted(spark, indexPath) { tmp =>
+      newCent.write.mode("overwrite").parquet(quantizerPath(tmp))
+      val cent = readQuantizer(spark, tmp)
+      writeMarker(spark, markerPath(tmp, Marker.Centroids), centroidFingerprint(cent))
+      writeGeneration(graft.operators.Similarity.ivfAssign(
+          pile.rows.select(col("vec_id"), col("embedding")), cent),
+        Piles.ivf.partitionCols, compactedSeg(tmp))
     }
-    fs.delete(sib, true)
-    if (!fs.rename(next, sib)) throw new java.io.IOException(
-      s"rebuildIvfIndex: staged centroid swap failed for $next — the pile's " +
-        "marker already records the new quantizer, so probes will refuse " +
-        "until recoverIvfRebuild (or a manual rename) completes the swap")
-  }
-
-  /** Recover an IVF pile after a crash mid-[[rebuildIvfIndex]] step 3
-    * (the pile itself is covered by [[recoverCompaction]]): when the
-    * promoted marker matches the STAGED `.next` artifact, finish the
-    * swap; when marker and live sibling already agree, drop stale
-    * staging. Anything else is surfaced loudly. Idempotent; returns
-    * the action taken. */
-  def recoverIvfRebuild(spark: SparkSession, indexPath: String): String = {
-    val sibStr = centroidSiblingPath(indexPath)
-    val sib = new org.apache.hadoop.fs.Path(sibStr)
-    val next = new org.apache.hadoop.fs.Path(sibStr + ".next")
-    val fs = sib.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = liveMarker(spark, indexPath, Marker.Centroids)
-    def fpOf(p: org.apache.hadoop.fs.Path): Option[String] =
-      if (!fs.exists(p)) None
-      else Some(centroidFingerprint(spark.read.parquet(p.toString)))
-    if (fpOf(sib).contains(marker)) {
-      fs.delete(next, true); "consistent"
-    } else if (fpOf(next).contains(marker)) {
-      fs.delete(sib, true)
-      if (!fs.rename(next, sib)) throw new java.io.IOException(
-        s"recoverIvfRebuild: rename $next -> $sib failed")
-      "swapped-next"
-    } else throw new java.io.IOException(
-      s"recoverIvfRebuild: neither $sibStr nor its .next staging matches the " +
-        s"pile's _centroids marker — restore the trained centroid artifact " +
-        "or re-run rebuildIvfIndex with the intended quantizer")
   }
 
   /** Embedding near-dup at ingest — SemDeDup's candidate generation
@@ -1324,21 +1297,25 @@ object Ingest {
 
   /** Atomic segment-pile replacement shared by every compactor: the
     * folded generation is fully written to a sibling temp path FIRST,
-    * then promoted with two filesystem renames. The live pile is never
+    * then promoted with two filesystem renames. Every underscore entry
+    * of the live root that the writer did not make itself (identity
+    * markers, IVF's `_quantizer`) is copied into the temp root first,
+    * so the promote replaces the whole pile. The live pile is never
     * deleted before the replacement is durable — a crash mid-compaction
     * leaves either the old generation live (crash before promote) or
     * parked at `<path>.compact-old` (crash between renames; recovery =
     * rename it back or re-promote the committed temp). ≙ the
     * reference's atomic segment replacement in delta-merge
     * (`DeltaMergeStore_InternalBg.cpp`). */
-  private def promoteCompacted(spark: SparkSession, livePath: String,
-      markers: Seq[(Marker, String)])(writeTmp: String => Unit): Unit = {
-    import org.apache.hadoop.fs.Path
+  private def promoteCompacted(spark: SparkSession, livePath: String)(
+      writeTmp: String => Unit): Unit = {
+    import org.apache.hadoop.fs.{FileUtil, Path}
     val tmpPath = livePath + ".compact-tmp"
     val live = new Path(livePath)
     val tmp = new Path(tmpPath)
     val old = new Path(livePath + ".compact-old")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = live.getFileSystem(conf)
     // Concurrent-append guard: compaction and ingest are meant to be
     // serialized by the maintenance driver (the reference's delta-merge
     // lock discipline), but a scheduling bug here would SILENTLY drop
@@ -1350,11 +1327,16 @@ object Ingest {
       if (!fs.exists(live)) Set.empty
       else fs.listStatus(live).map(_.getPath.getName).toSet
     val before = segListing()
+    // a temp root left by a failed attempt must not lend this one its
+    // entries
+    fs.delete(tmp, true)
     writeTmp(tmpPath)
-    // the markers ride the temp generation, so neither a crash after
-    // the promote nor recoverCompaction's promoted-tmp path can strand
-    // a marker-less pile
-    markers.foreach { case (m, v) => writeMarker(spark, markerPath(tmpPath, m), v) }
+    // the root's underscore entries ride the temp generation, so
+    // neither a crash after the promote nor recoverCompaction's
+    // promoted-tmp path can strand a pile without them
+    for (name <- before if name.startsWith("_") && !fs.exists(new Path(tmp, name)))
+      if (!FileUtil.copy(fs, new Path(live, name), fs, new Path(tmp, name), false, conf))
+        throw new java.io.IOException(s"compaction: carrying $name into $tmp failed")
     if (segListing() != before) {
       fs.delete(tmp, true)
       throw new java.io.IOException(

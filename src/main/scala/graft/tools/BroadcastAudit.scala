@@ -103,17 +103,24 @@ object BroadcastAudit {
   private def jarr(xs: Seq[String]): String =
     xs.map(x => "\"" + x + "\"").mkString("[", ",", "]")
 
+  /** The one flag rule: a broadcast is flagged when its build side
+    * scans a non-dimension table and its size estimate is unreliable
+    * (an unreliable node kind, or a scan the planner cannot see into).
+    * Gives the offending tables and the unreliable kinds. */
+  private def flagged(b: BroadcastExchangeExec): Option[(Seq[String], Seq[String])] = {
+    val bad = scansOf(b.child).filterNot(graft.sources.Tables.dims)
+    val kinds = unreliable(b.child)
+    if (bad.nonEmpty && (kinds.nonEmpty || bad.contains("(rdd-opaque)"))) Some((bad, kinds))
+    else None
+  }
+
   /** Flag descriptors ("tables via kinds") for one prepared plan —
     * reusable by `BroadcastAuditSpec`, which gates every NEW query's
     * plan against the reviewed allowlist. The session must have AQE
     * disabled so the STATIC decision is what gets audited. */
   def flagsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
-    broadcasts(df.queryExecution.executedPlan).flatMap { b =>
-      val bad = scansOf(b.child).filterNot(graft.sources.Tables.dims)
-      val kinds = unreliable(b.child)
-      if (bad.nonEmpty && (kinds.nonEmpty || bad.contains("(rdd-opaque)")))
-        Some(s"${bad.mkString("+")} via ${kinds.mkString("+")}")
-      else None
+    broadcasts(df.queryExecution.executedPlan).flatMap(flagged).map {
+      case (bad, kinds) => s"${bad.mkString("+")} via ${kinds.mkString("+")}"
     }
 
   def main(args: Array[String]): Unit = {
@@ -142,24 +149,19 @@ object BroadcastAudit {
         val plan = df.queryExecution.executedPlan
         val bs = broadcasts(plan)
         totalB += bs.size
-        val flags = bs.flatMap { b =>
-          val tabs = scansOf(b.child)
-          val bad = tabs.filterNot(graft.sources.Tables.dims)
-          val kinds = unreliable(b.child)
-          if (bad.nonEmpty && (kinds.nonEmpty || bad.contains("(rdd-opaque)"))) {
-            val est = b.child.logicalLink
-              .map(_.stats.sizeInBytes.toString).getOrElse("?")
-            if (sys.env.contains("AUDIT_VERBOSE")) {
-              System.err.println(s"### ${q.name} broadcast subtree " +
-                s"(tables=$bad via=$kinds est=$est):")
-              System.err.println(
-                b.child.treeString.linesIterator.take(30).mkString("\n"))
-            }
-            Some(s"""{"tables":${jarr(bad)},""" +
-              s""""via":${jarr(kinds)},""" +
-              s""""estBytes":"$est"}""")
-          } else None
-        }
+        val flags = bs.flatMap(b => flagged(b).map { case (bad, kinds) =>
+          val est = b.child.logicalLink
+            .map(_.stats.sizeInBytes.toString).getOrElse("?")
+          if (sys.env.contains("AUDIT_VERBOSE")) {
+            System.err.println(s"### ${q.name} broadcast subtree " +
+              s"(tables=$bad via=$kinds est=$est):")
+            System.err.println(
+              b.child.treeString.linesIterator.take(30).mkString("\n"))
+          }
+          s"""{"tables":${jarr(bad)},""" +
+            s""""via":${jarr(kinds)},""" +
+            s""""estBytes":"$est"}"""
+        })
         val sec = (System.nanoTime() - t0) / 1e9
         if (flags.nonEmpty) {
           totalFlags += flags.size

@@ -13,16 +13,18 @@ import graft.operators.Similarity
   * points: two real micro-batches, then a compaction, must leave a
   * read view equal to the two-segment one, and a root holding exactly
   * the promoted `seg=-1` generation plus the family's identity markers
-  * with their exact contents. A crash between the promote's two
-  * renames must recover with every marker intact. At every stage the
-  * engine's read (`Ingest.readPile`) gives the same view as a raw
-  * read of the directory. */
+  * with their exact contents (and, for IVF, its `_quantizer`). A crash
+  * between the promote's two renames must recover with every marker
+  * intact. At every stage the engine's read (`Ingest.readPile`) gives
+  * the same view as a raw read of the directory, and nothing of the
+  * pile lives outside its root and its stream checkpoint. */
 class SegmentPileSpec extends SparkTestBase {
 
   /** One pile family: its source rows, how to ingest a micro-batch and
     * compact, its read view of the pile's rows (sorted rows as text, so
-    * a multiset compares exactly), the markers its root must carry, and
-    * whether its compacted generation is stamped `_folded`. */
+    * a multiset compares exactly), the markers its root must carry,
+    * whether its compacted generation is stamped `_folded`, and whether
+    * its root holds a `_quantizer` whose fingerprint is `_centroids`. */
   private case class Family(
       name: String,
       source: () => DataFrame,
@@ -31,7 +33,8 @@ class SegmentPileSpec extends SparkTestBase {
       compact: String => Unit,
       view: DataFrame => Seq[String],
       markers: () => Map[String, String] = () => Map.empty,
-      folded: Boolean = false)
+      folded: Boolean = false,
+      quantizer: Boolean = false)
 
   private def docs = Tables.documents(spark, sf).orderBy(col("doc_id")).limit(200)
   private def events = Tables.events(spark, sf01)
@@ -50,7 +53,8 @@ class SegmentPileSpec extends SparkTestBase {
       (in, p) => Ingest.streamIvfIngest(spark, in, p, cent),
       p => Ingest.compactIvfIndex(spark, p),
       p => rows(p.select(col("vec_id"), col("cid").cast("long"))),
-      () => Map("_centroids" -> Ingest.centroidFingerprint(cent))),
+      () => Map("_centroids" -> Ingest.centroidFingerprint(cent)),
+      quantizer = true),
     Family("postings", () => docs, "doc_id",
       (in, p) => Ingest.streamPostingsIngest(spark, in, p, buckets = 8),
       p => Ingest.compactPostings(spark, p),
@@ -114,24 +118,29 @@ class SegmentPileSpec extends SparkTestBase {
         assert(read.folded === folded, s"$stage: fold stamp")
         assert(f.view(read.rows) === f.view(pile(p)), s"$stage: engine read = raw read")
       }
+      val artifacts = if (f.quantizer) Set("_quantizer") else Set.empty[String]
+      def quantizerIsMarked(stage: String): Unit = if (f.quantizer)
+        assert(Ingest.centroidFingerprint(spark.read.parquet(s"$p/_quantizer")) ===
+          read(s"$p/_centroids"), s"$stage: quantizer fingerprint = _centroids")
       val src = f.source()
       for (m <- 0 until 2) {
         src.filter(pmod(col(f.key), lit(2)) === m).write.mode("append").parquet(in)
         f.ingest(in, p)
       }
       val markers = f.markers()
-      assert(children(p) === Set("seg=0", "seg=1") ++ markers.keySet)
+      assert(children(p) === Set("seg=0", "seg=1") ++ markers.keySet ++ artifacts)
       val before = f.view(pile(p))
       assert(before.nonEmpty, "the fixture must put rows in the pile")
       engineRead("two segments", Seq(0L, 1L), folded = false)
 
       f.compact(p)
       assert(f.view(pile(p)) === before, "compaction must not change the read view")
-      assert(children(p) === Set("seg=-1") ++ markers.keySet)
+      assert(children(p) === Set("seg=-1") ++ markers.keySet ++ artifacts)
       engineRead("compacted", Nil, f.folded)
       markers.foreach { case (name, value) =>
         assert(read(s"$p/$name") === value, s"$name content")
       }
+      quantizerIsMarked("compacted")
       assert(fs.exists(new Path(s"$p/seg=-1/_folded")) === f.folded,
         "only the dup-span text fold stamps its generation")
 
@@ -141,12 +150,27 @@ class SegmentPileSpec extends SparkTestBase {
       fs.mkdirs(new Path(s"$p.compact-old/seg=0"))
       assert(Ingest.recoverCompaction(spark, p) === "promoted-tmp")
       assert(!fs.exists(new Path(s"$p.compact-old")))
-      assert(children(p) === Set("seg=-1") ++ markers.keySet)
+      assert(children(p) === Set("seg=-1") ++ markers.keySet ++ artifacts)
       markers.foreach { case (name, value) =>
         assert(read(s"$p/$name") === value, s"$name content after recovery")
       }
+      quantizerIsMarked("recovered")
       assert(f.view(pile(p)) === before, "recovery must not change the read view")
       engineRead("recovered", Nil, f.folded)
+
+      if (f.quantizer) {
+        // a rotation swaps the generation, the quantizer and its marker
+        // in the root, through the same promote
+        val cent16 = Similarity.ivfCentroids(embeddings, k = 16)
+        Ingest.rebuildIvfIndex(spark, p, cent16)
+        assert(children(p) === Set("seg=-1") ++ markers.keySet ++ artifacts)
+        assert(read(s"$p/_centroids") === Ingest.centroidFingerprint(cent16))
+        quantizerIsMarked("rotated")
+        engineRead("rotated", Nil, folded = false)
+      }
+      // the pile is its root: nothing of it lives beside the root but
+      // its stream checkpoint
+      assert(children(base) === Set("in", "pile", "pile-ckpt"))
     }
   }
 

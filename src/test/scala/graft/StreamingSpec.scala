@@ -334,8 +334,9 @@ class StreamingSpec extends SparkTestBase {
       .select(col("vec_id"), col("cid"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(stored === direct && stored.nonEmpty)
-    // the promoted generation carries the identity marker, and the
-    // probe still works (sibling verified against it) after the fold
+    // the promoted generation carries the identity marker and the
+    // quantizer, and the probe still works (quantizer verified against
+    // the marker) after the fold
     assert(key(Ingest.ivfProbe(spark, idx, queries, nProbe = 4)
       .select(col("qid"), col("vec_id"), col("rnk"))) === batch)
     // centroid identity: ingest with a DIFFERENT quantizer is refused
@@ -345,13 +346,13 @@ class StreamingSpec extends SparkTestBase {
       Ingest.streamIvfIngest(spark, in, idx, otherCent)
     }
     assert(ex.getMessage.contains("different centroid set"))
-    // a swapped sibling artifact is caught by the fingerprint check
-    otherCent.write.mode("overwrite").parquet(idx + "-centroids")
+    // a swapped quantizer is caught by the fingerprint check
+    otherCent.write.mode("overwrite").parquet(idx + "/_quantizer")
     val ex2 = intercept[java.io.IOException] {
       Ingest.ivfProbe(spark, idx, queries, nProbe = 4).collect()
     }
     assert(ex2.getMessage.contains("does not match the pile's"))
-    cent.write.mode("overwrite").parquet(idx + "-centroids") // restore
+    cent.write.mode("overwrite").parquet(idx + "/_quantizer") // restore
     // first-boot ordering: probing a never-created pile is an empty
     // result, not an AnalysisException
     assert(Ingest.ivfProbe(spark, base.toString + "/nonexistent",
@@ -432,29 +433,37 @@ class StreamingSpec extends SparkTestBase {
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     def key(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(key(Ingest.ivfProbe(spark, idx, queries, nProbe = 4)
-        .select(col("qid"), col("vec_id"), col("rnk"))) ===
-      key(Similarity.ivfSearch(e, nProbe = 4, nCentroids = 16,
-          centroids = Some(cent16))
-        .select(col("qid"), col("vec_id"), col("rnk"))))
-    // crash window (step 3 of the rebuild protocol): marker(new) with
-    // the OLD sibling restored — every probe must refuse loudly, and
-    // recoverIvfRebuild finishes the swap from the staged artifact
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sib = new org.apache.hadoop.fs.Path(idx + "-centroids")
-    val next = new org.apache.hadoop.fs.Path(idx + "-centroids.next")
-    assert(fs.rename(sib, next)) // manufactured: swap never finished
-    cent32.write.mode("overwrite").parquet(sib.toString) // stale artifact
-    val ex2 = intercept[java.io.IOException] {
-      Ingest.ivfProbe(spark, idx, queries, nProbe = 4).collect()
+    def probeOn(c: org.apache.spark.sql.DataFrame) =
+      key(Similarity.ivfSearch(e, nProbe = 4, centroids = Some(c))
+        .select(col("qid"), col("vec_id"), col("rnk")))
+    def probed() = key(Ingest.ivfProbe(spark, idx, queries, nProbe = 4)
+      .select(col("qid"), col("vec_id"), col("rnk")))
+    val on16 = probeOn(cent16)
+    assert(probed() === on16)
+    // a crash inside a rotation is a crash inside its promote: rebuild
+    // for real, then park its complete temp root and put back the pile
+    // as it stood before, to stage the states recoverCompaction meets
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(idx).getFileSystem(conf)
+    def interruptedRotation(c: org.apache.spark.sql.DataFrame, prevAt: String): Unit = {
+      assert(FileUtil.copy(fs, new Path(idx), fs, new Path(idx + ".prev"), false, conf))
+      Ingest.rebuildIvfIndex(spark, idx, c)
+      assert(fs.rename(new Path(idx), new Path(idx + ".compact-tmp")))
+      assert(fs.rename(new Path(idx + ".prev"), new Path(prevAt)))
     }
-    assert(ex2.getMessage.contains("does not match the pile's"))
-    assert(Ingest.recoverIvfRebuild(spark, idx) === "swapped-next")
-    assert(key(Ingest.ivfProbe(spark, idx, queries, nProbe = 4)
-      .select(col("qid"), col("vec_id"), col("rnk"))).nonEmpty)
-    // idempotent: a second recovery is a no-op
-    assert(Ingest.recoverIvfRebuild(spark, idx) === "consistent")
+    // crash before the demote: the stale temp generation is dropped and
+    // the probe answers with the old quantizer
+    interruptedRotation(cent32, idx)
+    assert(Ingest.recoverCompaction(spark, idx) === "live-intact")
+    assert(!fs.exists(new Path(idx + ".compact-tmp")))
+    assert(probed() === on16 && stored() === directOn(cent16))
+    // crash between the promote's two renames: the new generation,
+    // quantizer and marker are promoted together
+    interruptedRotation(cent32, idx + ".compact-old")
+    assert(Ingest.recoverCompaction(spark, idx) === "promoted-tmp")
+    assert(!fs.exists(new Path(idx + ".compact-old")))
+    assert(probed() === probeOn(cent32) && stored() === directOn(cent32))
   }
 
   test("stream-stream LEFT OUTER interval join: unmatched rows flush as the watermark passes") {
@@ -1372,12 +1381,9 @@ class StreamingSpec extends SparkTestBase {
       .write.mode("overwrite").parquet(in)
     Ingest.streamLshIngest(spark, in, idx)
     val probe = Seq((100000L, text)).toDF("doc_id", "text")
-    // a bucket AT the cap: every pair comes through. The result is
-    // persisted, and Spark's cache matches a later read of the same
-    // pile path to it, so release it before the pile grows
+    // a bucket AT the cap: every pair comes through
     val atCap = Ingest.lshProbe(spark, idx, probe)
     assert(atCap.count() === cap)
-    atCap.unpersist(blocking = true)
     // one more member puts it over: the probe refuses loudly
     Seq((cap + 1L, text)).toDF("doc_id", "text").write.mode("append").parquet(in)
     Ingest.streamLshIngest(spark, in, idx)
@@ -1612,11 +1618,11 @@ class StreamingSpec extends SparkTestBase {
     val base = Files.createTempDirectory("graft-shingles")
     val in = base.toString + "/in"
     val pile = base.toString + "/sh"
-    docs.filter(col("doc_id") % 2 === 0).write.mode("overwrite").parquet(in)
+    docs.filter(col("doc_id") % 3 === 0).write.mode("overwrite").parquet(in)
     Ingest.streamShingleIngest(spark, in, pile)
     val files1 = parquetFiles(pile)
     assert(files1.nonEmpty)
-    docs.filter(col("doc_id") % 2 === 1).write.mode("append").parquet(in)
+    docs.filter(col("doc_id") % 3 === 1).write.mode("append").parquet(in)
     Ingest.streamShingleIngest(spark, in, pile)
     assert(files1.subsetOf(parquetFiles(pile)),
       "incremental ingest must not rewrite existing segments")
@@ -1624,15 +1630,15 @@ class StreamingSpec extends SparkTestBase {
     val ids = docs.limit(40).select(col("doc_id").as("old_doc"))
     def key(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[String]] =
       df.collect().map(r => r.getLong(0) -> r.getSeq[String](1).sorted).toMap
-    val fetched = Ingest.shingleFetch(spark, pile, ids)
-    val got = key(fetched)
-    fetched.unpersist(blocking = true)
-    val direct = key(docs.filter(size(TextPipeline.tokens) >= 3)
-      .join(ids, col("doc_id") === col("old_doc"), "left_semi")
-      .select(col("doc_id"),
-        array_distinct(TextPipeline.shingles(TextPipeline.tokens, 3)).as("sh")))
-    assert(got === direct && got.nonEmpty,
-      s"pile fetch must equal the direct shingle computation (${got.size} vs ${direct.size})")
+    def direct(ingested: org.apache.spark.sql.Column) =
+      key(docs.filter(ingested && size(TextPipeline.tokens) >= 3)
+        .join(ids, col("doc_id") === col("old_doc"), "left_semi")
+        .select(col("doc_id"),
+          array_distinct(TextPipeline.shingles(TextPipeline.tokens, 3)).as("sh")))
+    val twoTicks = direct(col("doc_id") % 3 < 2)
+    val got = key(Ingest.shingleFetch(spark, pile, ids))
+    assert(got === twoTicks && got.nonEmpty,
+      s"pile fetch must equal the direct shingle computation (${got.size} vs ${twoTicks.size})")
     // the fetch partition-prunes on dbucket (the point-read posture)
     val plan = spark.read.parquet(pile).filter(col("dbucket") === 3)
       .queryExecution.executedPlan.toString
@@ -1641,12 +1647,20 @@ class StreamingSpec extends SparkTestBase {
     // compaction is read-identical and shrinks the pile
     val filesBefore = spark.read.parquet(pile).inputFiles.length
     Ingest.compactShinglePile(spark, pile)
-    val fetched2 = Ingest.shingleFetch(spark, pile, ids)
-    val got2 = key(fetched2)
-    fetched2.unpersist(blocking = true)
-    assert(got2 === direct, "compaction must not change fetch results")
+    assert(key(Ingest.shingleFetch(spark, pile, ids)) === twoTicks,
+      "compaction must not change fetch results")
     assert(spark.read.parquet(pile).inputFiles.length < filesBefore,
       "compaction must shrink the segment pile")
+    // a third tick and a second compaction bring seg=-1 back at the
+    // same path: the same fetch, the earlier result still persisted,
+    // must see the new documents
+    docs.filter(col("doc_id") % 3 === 2).write.mode("append").parquet(in)
+    Ingest.streamShingleIngest(spark, in, pile)
+    Ingest.compactShinglePile(spark, pile)
+    val all = direct(lit(true))
+    assert(all.size > twoTicks.size, "the third tick must add partners")
+    assert(key(Ingest.shingleFetch(spark, pile, ids)) === all,
+      "a fetch after the pile changed must not be served an earlier fetch")
     // a data-less pile with a nonempty id set refuses loudly — the
     // empty fetch would silently drop every near-dup confirm
     val e = intercept[java.io.IOException] {
